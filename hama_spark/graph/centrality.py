@@ -24,7 +24,9 @@ Scale shape per round: frontier(lm, id) ⋈ edges shuffles on the join
 key only; the discovered-set anti-join keys on (lm, id); state is
 bounded by L·V rows of (id, id, int) — never adjacency lists, never a
 per-vertex array. Lazy localCheckpoint each round bounds the plan the
-same way the Pregel loops do.
+same way the Pregel loops do, and the result is returned as that plain
+lazy plan under the caller's session confs — the operator changes no
+session conf, so a query sharing the session keeps its own planning.
 """
 
 from __future__ import annotations
@@ -63,7 +65,6 @@ def harmonic_centrality(
     symmetrize: bool = True,
     prepared: bool = False,
     batch_landmarks: int | None = None,
-    loop_plan: str = "auto",
 ) -> DataFrame:
     """edges(src, dst) -> (id, harmonic, n_lm).
 
@@ -93,46 +94,10 @@ def harmonic_centrality(
     graphs (the 100x tier spills/OOMs the per-round sort state when L·V
     outgrows one JVM's heap; a real cluster adds memory with data, a
     single box cannot). Default None = one batch (unchanged plan).
-
-    ``loop_plan`` (r10, the :func:`hama_spark.plans.pregel.pregel`
-    lever): each BFS round's frontier⋈edges join otherwise broadcasts
-    the frontier — a driver-scheduled BroadcastExchange job per round
-    plus an AQE query-stage round-trip per exchange. "auto" scopes
-    {AQE off, no auto-broadcast, no broadcast join} to the call when
-    the edge count (the relation driving per-round join volume)
-    reaches the guard threshold; the result materializes via an eager
-    localCheckpoint inside the scope so every round executes under it.
-    Interleaved A/B at sf0.1 (~1.2M symmetrized edges): base minima
-    9.0s vs guard 5.6s, identical output hashes.
     """
-    from hama_spark.plans.pregel import _LoopPlanGuard
-
-    guard = _LoopPlanGuard(edges.sparkSession, loop_plan, dense=False)
-    try:
-        return _harmonic(
-            edges, landmarks, radius, seed, symmetrize, prepared,
-            batch_landmarks, guard,
-        )
-    finally:
-        guard.restore()
-
-
-def _harmonic(
-    edges: DataFrame,
-    landmarks: int,
-    radius: int,
-    seed: int,
-    symmetrize: bool,
-    prepared: bool,
-    batch_landmarks: int | None,
-    guard,
-) -> DataFrame:
     from hama_spark.graph.prep import edge_relation
 
     e = edge_relation(edges, symmetrize, prepared)
-    # prepared edges are materialized, so this count is a cheap scan;
-    # per-round join volume scales with |E|, so the guard arms on it
-    guard.arm(e.count())
     verts = (
         e.select(F.col("src").alias("id"))
         .union(e.select(F.col("dst").alias("id")))
@@ -195,15 +160,8 @@ def _harmonic(
             F.count(F.lit(1)).alias("n_lm"),
         )
     )
-    out = verts.join(scores, "id", "left").select(
+    return verts.join(scores, "id", "left").select(
         "id",
         F.coalesce("harmonic", F.lit(0.0)).alias("harmonic"),
         F.coalesce("n_lm", F.lit(0)).alias("n_lm"),
     )
-    if guard.armed:
-        # eager: every BFS round (the lazy checkpoints above) must
-        # execute INSIDE the loop-plan guard scope — the caller's
-        # action would otherwise run after the confs are restored.
-        # Unarmed calls keep the original lazy return.
-        out = out.localCheckpoint(eager=True)
-    return out

@@ -18,7 +18,10 @@ only wedge enumeration is capped.
 
 One shuffle for degrees, one for the wedge self-join key, one for the
 pair groupBy; the final per-pair relation is bounded by the wedge
-count.
+count. Only the wedge legs are materialized (eager localCheckpoint,
+read by both sides of the self-join); the result is returned as a plain
+lazy plan under the caller's session confs — the operator changes no
+session conf, so a query sharing the session keeps its own planning.
 """
 
 from __future__ import annotations
@@ -34,7 +37,6 @@ def link_prediction(
     symmetrize: bool = True,
     topk: int | None = None,
     prepared: bool = False,
-    loop_plan: str = "auto",
 ) -> DataFrame:
     """edges(src, dst) -> (id_a, id_b, common_neighbors, jaccard,
     adamic_adar) for id_a < id_b pairs sharing >= ``min_common``
@@ -50,51 +52,10 @@ def link_prediction(
     deduplicated, and materialized — used as-is (``symmetrize``
     ignored), sharing one graph build across centrality/link-analysis
     passes (see ``harmonic_centrality``).
-
-    ``loop_plan`` (r10, the same guard the iterative family uses —
-    named for API consistency though this pipeline is straight-line):
-    "auto" scopes {AQE off, no auto-broadcast, no broadcast join} to
-    the call when the edge count reaches the guard threshold. The
-    wedge pipeline is 4-5 chained stages (degrees -> legs -> self-join
-    -> pair agg -> degree joins -> topk); under the default planning
-    each broadcast build is a driver-scheduled job and every exchange
-    an AQE query-stage round-trip, and those floors dominate at bench
-    scale (interleaved A/B at sf0.1: base mean 4.7s vs guard 3.3s,
-    0.70x, identical top-25). Results materialize inside the scope via
-    eager localCheckpoint ONLY when armed; unarmed calls return the
-    original lazy plan.
     """
-    from hama_spark.graph.prep import edge_relation
-    from hama_spark.plans.pregel import _LoopPlanGuard
-
-    guard = _LoopPlanGuard(edges.sparkSession, loop_plan, dense=False)
-    try:
-        out = _link_prediction(
-            edges, max_neighbor_degree, min_common, symmetrize, topk,
-            prepared, guard,
-        )
-        if guard.armed:
-            out = out.localCheckpoint(eager=True)
-        return out
-    finally:
-        guard.restore()
-
-
-def _link_prediction(
-    edges: DataFrame,
-    max_neighbor_degree: int,
-    min_common: int,
-    symmetrize: bool,
-    topk: int | None,
-    prepared: bool,
-    guard,
-) -> DataFrame:
     from hama_spark.graph.prep import edge_relation
 
     e = edge_relation(edges, symmetrize, prepared)
-    # prepared edges are checkpointed, so this is a cheap scan; wedge
-    # enumeration volume scales with |E| (Σ deg(w)² over centers)
-    guard.arm(e.count())
 
     # two degree views — identical on an undirected (symmetrized) graph,
     # and the correct pair on a directed one: centers fan out along

@@ -236,10 +236,6 @@ def pregel(
     """
     if halt_check_interval < 1:
         raise ValueError(f"halt_check_interval must be >= 1, got {halt_check_interval}")
-    if loop_plan not in ("auto", "shuffle", "broadcast"):
-        raise ValueError(
-            f"loop_plan must be 'auto', 'shuffle' or 'broadcast', got {loop_plan}"
-        )
     spark = vertices.sparkSession
     n_part = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
     guard = _LoopPlanGuard(spark, loop_plan, dense)
@@ -256,18 +252,26 @@ def pregel(
 
 
 class _LoopPlanGuard:
-    """Scopes the shuffle loop-plan confs to one pregel call.
+    """Scopes the shuffle loop-plan confs to one iterative call.
 
-    ``loop_plan="auto"`` decides per GRAPH SIZE, which is only known
-    after the pre-loop vertex count — the loop calls :meth:`arm` with
-    ``num_vertices`` right after counting, and the guard applies the
-    confs only when the graph is big enough that per-superstep
+    Two operators use it, each around its whole loop: :func:`pregel`
+    (sized on the pre-loop VERTEX count) and
+    :func:`hama_spark.graph.hits.hits` (sized on the EDGE count — HITS
+    is dense, so per-iteration volume scales with |E|). ``loop_plan=
+    "auto"`` decides per graph size, which is only known after that
+    count — the caller passes it to :meth:`arm`, and the guard applies
+    the confs only when the graph is big enough that per-superstep
     broadcast-build jobs dominate (tiny graphs — e.g. the 25-vertex
     nation DAG — plan better WITH broadcasts: a shuffle join's two
     16-task exchanges cost more than broadcasting 25 rows; interleaved
     A/B measured both directions). The threshold is parameterized, not
-    tuned to this box: it marks where per-superstep data volume starts
-    to amortize the fixed per-stage floor."""
+    tuned to one machine: it marks where per-superstep data volume starts
+    to amortize the fixed per-stage floor.
+
+    The confs are SESSION-global while armed: a query running
+    concurrently on the same SparkSession plans without AQE and
+    broadcast joins until :meth:`restore`. Straight-line operators
+    therefore do not use it."""
 
     MIN_VERTICES = int(
         os.environ.get("SPARK_GRAFT_PREGEL_SHUFFLE_MIN_VERTICES", "50000")
@@ -287,22 +291,14 @@ class _LoopPlanGuard:
         self.plan = "broadcast" if dense else loop_plan
         self.saved: dict[str, str | None] = {}
 
-    def arm(self, num_vertices: int) -> None:
+    def arm(self, size: int) -> None:
         if self.plan == "broadcast" or self.saved:
             return
-        if self.plan == "auto" and num_vertices < self.MIN_VERTICES:
+        if self.plan == "auto" and size < self.MIN_VERTICES:
             return
         for k, v in self.CONFS.items():
             self.saved[k] = self.spark.conf.get(k, None)
             self.spark.conf.set(k, v)
-
-    @property
-    def armed(self) -> bool:
-        """True once :meth:`arm` applied the confs — callers that
-        return a LAZY result use this to materialize inside the scope
-        only when the scoped plan actually needs it (unarmed calls keep
-        their original lazy return untouched)."""
-        return bool(self.saved)
 
     def restore(self) -> None:
         for k, v in self.saved.items():

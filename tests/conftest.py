@@ -62,3 +62,30 @@ def assert_df_equals_oracle(df, duck_con, sql, sort_cols=None, tol=None):
                 assert math.isclose(a, b, rel_tol=tol, abs_tol=tol), f"{a} != {b} (row {sr} vs {dr})"
             else:
                 assert a == b, f"{a} != {b} (row {sr} vs {dr})"
+
+
+def _set_or_unset(spark, key, value):
+    if value is None:
+        spark.conf.unset(key)
+    else:
+        spark.conf.set(key, value)
+
+
+def conf_matrix_outputs(spark, run):
+    """``run()`` under every {AQE on, off} x {autoBroadcastJoinThreshold
+    session default, -1} setting -> {(aqe, threshold): output}. Each
+    setting is applied around the call and the session's prior values
+    are restored afterwards, even when ``run`` raises."""
+    aqe, bcast = "spark.sql.adaptive.enabled", "spark.sql.autoBroadcastJoinThreshold"
+    before = {k: spark.conf.get(k, None) for k in (aqe, bcast)}
+    outs = {}
+    try:
+        for a in ("true", "false"):
+            for t in (before[bcast], "-1"):
+                spark.conf.set(aqe, a)
+                _set_or_unset(spark, bcast, t)
+                outs[(a, t)] = run()
+    finally:
+        for k, v in before.items():
+            _set_or_unset(spark, k, v)
+    return outs

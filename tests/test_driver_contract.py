@@ -45,12 +45,16 @@ print("BARE_SESSION_OK", rows)
 
 
 def test_entry_and_queries_on_bare_session():
+    # conftest pins SPARK_GRAFT_SHUFFLE for the suite's own session; the
+    # stock-session subprocess must not inherit it
+    env = {k: v for k, v in os.environ.items() if k != "SPARK_GRAFT_SHUFFLE"}
     proc = subprocess.run(
         [sys.executable, "-c", _SCRIPT.format(repo=REPO)],
         capture_output=True,
         text=True,
         timeout=300,
         cwd=REPO,
+        env=env,
     )
     assert proc.returncode == 0, proc.stderr[-3000:]
     assert "BARE_SESSION_OK" in proc.stdout, proc.stdout[-1000:]
