@@ -1290,31 +1290,8 @@ def _q_harmonic_centrality(spark, t):
     from hama_spark.graph import harmonic_centrality
 
     return harmonic_centrality(
-        _sym_sp_edges_cached(spark, t), landmarks=8, radius=4, seed=42,
-        prepared=True,
+        _sp_edges(spark, t), landmarks=8, radius=4, seed=42
     )
-
-
-_SYM_EDGES_MEMO: dict = {}
-
-
-def _sym_sp_edges_cached(spark, t):
-    """Symmetrized deduplicated supplier-part edge set, materialized
-    once per (session, table plan): harmonic_centrality and
-    betweenness_centrality run over the SAME undirected graph, so the
-    union+distinct+checkpoint build (the dominant per-query setup cost)
-    is paid once and both operators take the prepared=True fast path."""
-    from pyspark.sql import functions as F
-
-    edges = _sp_edges(spark, t)
-    key = (spark.sparkContext.applicationId, edges.semanticHash())
-    if key not in _SYM_EDGES_MEMO:
-        _SYM_EDGES_MEMO.clear()  # single-entry memo, evict for GC
-        e = edges.union(
-            edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-        )
-        _SYM_EDGES_MEMO[key] = e.distinct().localCheckpoint(eager=True)
-    return _SYM_EDGES_MEMO[key]
 
 
 def _q_betweenness(spark, t):
@@ -1325,8 +1302,7 @@ def _q_betweenness(spark, t):
     from hama_spark.graph import betweenness_centrality
 
     return betweenness_centrality(
-        _sym_sp_edges_cached(spark, t), sources=4, radius=3, seed=42,
-        prepared=True,
+        _sp_edges(spark, t), sources=4, radius=3, seed=42
     )
 
 
@@ -2550,32 +2526,10 @@ def _q_sample_balanced(spark, t):
     )
 
 
-_LSH_MEMO: dict = {}
-
-
-def _lsh_pairs_cached(spark, docs):
-    """MinHash-LSH pairs, materialized once per (session, corpus plan):
-    bench/driver processes run both minhash_lsh_pairs and dedup_near, so
-    the cluster-collapse query reuses the exact checkpointed pairs
-    instead of re-shingling + re-signing the corpus (VERDICT r1 #3)."""
-    from hama_spark.extensions import minhash_lsh_dup_pairs
-
-    key = (spark.sparkContext.applicationId, docs.semanticHash())
-    if key not in _LSH_MEMO:
-        # single-entry memo: a new (session, corpus) key evicts the
-        # old one so stale eager-checkpoint blocks can be GC'd
-        _LSH_MEMO.clear()
-        _LSH_MEMO[key] = minhash_lsh_dup_pairs(
-            docs, threshold=0.5, num_hashes=16, bands=4
-        ).localCheckpoint(eager=True)
-    return _LSH_MEMO[key]
-
-
 def _q_dedup_near(spark, t):
     from hama_spark.extensions import dedup_near
 
-    docs = t["documents"]
-    return dedup_near(docs, threshold=0.5, pairs=_lsh_pairs_cached(spark, docs))
+    return dedup_near(t["documents"], threshold=0.5, num_hashes=16, bands=4)
 
 
 def _q_ngram_jaccard(spark, t):
@@ -2585,7 +2539,11 @@ def _q_ngram_jaccard(spark, t):
 
 
 def _q_minhash_lsh(spark, t):
-    return _lsh_pairs_cached(spark, t["documents"])
+    from hama_spark.extensions import minhash_lsh_dup_pairs
+
+    return minhash_lsh_dup_pairs(
+        t["documents"], threshold=0.5, num_hashes=16, bands=4
+    )
 
 
 def _q_simhash(spark, t):
@@ -2602,45 +2560,23 @@ def _q_embedding_dups(spark, t):
     return embedding_cosine_dup_pairs(t["embeddings"], threshold=0.5)
 
 
-_TOPK_MEMO: dict = {}
-
-
-def _topk_cached(spark, emb, method: str):
-    """The searchers' (tiny) top-k results, materialized once per
-    (session, corpus): ann_recall consumes three of them and the
+def _topk(emb, method: str):
+    """One searcher's top-k for the shared query set (vec_id < 5): the
     standalone cosine_topk / lsh_cosine_topk / ivf_topk /
-    hard_negatives queries re-read the same 50-row checkpoints instead
-    of re-running the scans. The IVF index (k-means cells + centers)
-    is itself cached so the plain probe and the hard-negative probe
-    train once."""
+    hard_negatives queries and ann_recall's comparison all search with
+    these parameters."""
     from hama_spark.extensions import cosine_topk, hard_negatives, ivf_topk, lsh_cosine_topk
-    from hama_spark.extensions.similarity import _kmeans_cells
 
-    key = (spark.sparkContext.applicationId, emb.semanticHash(), method)
-    if key not in _TOPK_MEMO:
-        # evict other corpora only (all methods of one corpus coexist —
-        # ann_recall needs several together)
-        for k_ in [k_ for k_ in _TOPK_MEMO if k_[:2] != key[:2]]:
-            del _TOPK_MEMO[k_]
-        q = emb.filter("vec_id < 5")
-        if method == "cosine":
-            df = cosine_topk(emb, q, k=10)
-        elif method == "lsh":
-            df = lsh_cosine_topk(emb, q, k=10, planes=4, tables=8, dim=64)
-        else:
-            cells_key = key[:2] + ("_cells",)
-            if cells_key not in _TOPK_MEMO:
-                cb, centers = _kmeans_cells(
-                    emb, IVF_CELLS, IVF_KM_ITERS, "vec_id", "embedding"
-                )
-                _TOPK_MEMO[cells_key] = (cb.localCheckpoint(eager=True), centers)
-            fn = ivf_topk if method == "ivf" else hard_negatives
-            df = fn(
-                emb, q, k=IVF_K, n_cells=IVF_CELLS, nprobe=IVF_PROBE,
-                kmeans_iter=IVF_KM_ITERS, cells=_TOPK_MEMO[cells_key],
-            )
-        _TOPK_MEMO[key] = df.localCheckpoint(eager=True)
-    return _TOPK_MEMO[key]
+    q = emb.filter("vec_id < 5")
+    if method == "cosine":
+        return cosine_topk(emb, q, k=10)
+    if method == "lsh":
+        return lsh_cosine_topk(emb, q, k=10, planes=4, tables=8, dim=64)
+    fn = ivf_topk if method == "ivf" else hard_negatives
+    return fn(
+        emb, q, k=IVF_K, n_cells=IVF_CELLS, nprobe=IVF_PROBE,
+        kmeans_iter=IVF_KM_ITERS,
+    )
 
 
 def _q_knn_graph(spark, t):
@@ -2656,54 +2592,37 @@ def _q_knn_graph(spark, t):
 
 
 def _q_cosine_topk(spark, t):
-    return _topk_cached(spark, t["embeddings"], "cosine")
+    return _topk(t["embeddings"], "cosine")
 
 
 def _q_lsh_topk(spark, t):
-    return _topk_cached(spark, t["embeddings"], "lsh")
-
-
-_EMB_PAIRS_MEMO: dict = {}
-
-
-def _emb_pairs_cached(spark, emb):
-    """LSH cosine dup pairs, materialized once per (session, corpus):
-    lsh_cosine_pairs and dedup_embedding share the bucket-join output the
-    same way minhash_lsh_pairs/dedup_near share theirs."""
-    from hama_spark.extensions import lsh_cosine_dup_pairs
-
-    key = (spark.sparkContext.applicationId, emb.semanticHash())
-    if key not in _EMB_PAIRS_MEMO:
-        # single-entry memo: a new (session, corpus) key evicts the
-        # old one so stale eager-checkpoint blocks can be GC'd
-        _EMB_PAIRS_MEMO.clear()
-        _EMB_PAIRS_MEMO[key] = lsh_cosine_dup_pairs(
-            emb, threshold=0.45, planes=4, tables=8, dim=64
-        ).localCheckpoint(eager=True)
-    return _EMB_PAIRS_MEMO[key]
+    return _topk(t["embeddings"], "lsh")
 
 
 def _q_lsh_cosine_pairs(spark, t):
-    return _emb_pairs_cached(spark, t["embeddings"])
+    from hama_spark.extensions import lsh_cosine_dup_pairs
+
+    return lsh_cosine_dup_pairs(
+        t["embeddings"], threshold=0.45, planes=4, tables=8, dim=64
+    )
 
 
 def _q_dedup_embedding(spark, t):
     from hama_spark.extensions import dedup_embedding
 
-    emb = t["embeddings"]
-    return dedup_embedding(emb, pairs=_emb_pairs_cached(spark, emb))
+    return dedup_embedding(t["embeddings"], threshold=0.45, planes=4, tables=8)
 
 
 def _q_ivf_topk(spark, t):
-    return _topk_cached(spark, t["embeddings"], "ivf")
+    return _topk(t["embeddings"], "ivf")
 
 
 def _q_hard_negatives(spark, t):
     """Hard-negative mining (DPR-style): per query the top-k most
     similar corpus vectors from OUTSIDE its own semantic cell — the
-    IVF probe with the nearest cell skipped, sharing ivf_topk's cached
-    index (k-means trains once per corpus)."""
-    return _topk_cached(spark, t["embeddings"], "hard_negatives")
+    IVF probe with the nearest cell skipped, over the same k-means
+    index parameters as ivf_topk."""
+    return _topk(t["embeddings"], "hard_negatives")
 
 
 def _q_video_frames(spark, t):
@@ -2772,28 +2691,13 @@ def _q_importance_weights(spark, t):
     )
 
 
-_SEM_PAIRS_MEMO: dict = {}
-
-
-def _sem_pairs_cached(spark, emb):
-    """semantic_dup_pairs materialized once per (session, corpus):
-    semantic_dup_pairs and semantic_dedup share the within-cell join
-    output the same way minhash_lsh_pairs/dedup_near share theirs."""
+def _q_semantic_dup_pairs(spark, t):
     from hama_spark.extensions import semantic_dup_pairs
 
-    key = (spark.sparkContext.applicationId, emb.semanticHash())
-    if key not in _SEM_PAIRS_MEMO:
-        # single-entry memo: a new (session, corpus) key evicts the
-        # old one so stale eager-checkpoint blocks can be GC'd
-        _SEM_PAIRS_MEMO.clear()
-        _SEM_PAIRS_MEMO[key] = semantic_dup_pairs(
-            emb, threshold=SEM_THRESHOLD, n_cells=SEM_CELLS, kmeans_iter=SEM_KM_ITERS
-        ).localCheckpoint(eager=True)
-    return _SEM_PAIRS_MEMO[key]
-
-
-def _q_semantic_dup_pairs(spark, t):
-    return _sem_pairs_cached(spark, t["embeddings"])
+    return semantic_dup_pairs(
+        t["embeddings"], threshold=SEM_THRESHOLD, n_cells=SEM_CELLS,
+        kmeans_iter=SEM_KM_ITERS,
+    )
 
 
 def _q_semantic_dedup(spark, t):
@@ -2801,9 +2705,9 @@ def _q_semantic_dedup(spark, t):
     components -> lowest id per semantic duplicate group."""
     from hama_spark.extensions import semantic_dedup
 
-    emb = t["embeddings"]
     return semantic_dedup(
-        emb, pairs=_sem_pairs_cached(spark, emb).drop("cosine", "cell")
+        t["embeddings"], threshold=SEM_THRESHOLD, n_cells=SEM_CELLS,
+        kmeans_iter=SEM_KM_ITERS,
     )
 
 
@@ -2903,21 +2807,10 @@ def _q_quality_classifier(spark, t):
     return quality_classifier_scores(t["documents"], alpha=QC_ALPHA, iterations=QC_ITERS)
 
 
-_BPE_MEMO: dict = {}
-
-
-def _bpe_merges_cached(spark, docs):
-    """Trained BPE merge table, memoized per (session, corpus plan):
-    bench/driver processes run both bpe_train_merges and
-    bpe_vocab_token_count, and the counting query would otherwise
-    re-run the full num_merges-round training loop."""
+def _bpe_merges(docs):
     from hama_spark.extensions.bpe import train_bpe_merges
 
-    key = (spark.sparkContext.applicationId, docs.semanticHash())
-    if key not in _BPE_MEMO:
-        _BPE_MEMO.clear()
-        _BPE_MEMO[key] = train_bpe_merges(docs, num_merges=_BPE_NUM_MERGES)
-    return _BPE_MEMO[key]
+    return train_bpe_merges(docs, num_merges=_BPE_NUM_MERGES)
 
 
 def _q_bpe_train_merges(spark, t):
@@ -2926,7 +2819,7 @@ def _q_bpe_train_merges(spark, t):
     schedule in SQL and must land the identical 24 rules."""
     from hama_spark.extensions.bpe import merges_df
 
-    return merges_df(spark, _bpe_merges_cached(spark, t["documents"]))
+    return merges_df(spark, _bpe_merges(t["documents"]))
 
 
 _SPAN_SHINGLE_K, _SPAN_MAX_DF, _SPAN_MIN_SHARED = 8, 50, 3
@@ -2935,44 +2828,16 @@ _SPAN_SHINGLE_K, _SPAN_MAX_DF, _SPAN_MIN_SHARED = 8, 50, 3
 # corpus size in production)
 _BOILER_MIN_DF = 3
 
-_SPAN_MEMO: dict = {}
-
-
-def _span_shingles_cached(spark, docs):
-    """Doc-frequency-annotated positional shingles, materialized once
-    per (session, corpus): shared_span_pairs, scrub_shared_spans AND
-    scrub_boilerplate all slice their df range from the same
-    (h, id, pos, df) relation — the shingle scan + df count price
-    once; each query pays only its own filter + join."""
-    from hama_spark.extensions.dedup import positional_shingles_with_df
-
-    key = (spark.sparkContext.applicationId, docs.semanticHash())
-    if key not in _SPAN_MEMO:
-        _SPAN_MEMO.clear()
-        _SPAN_MEMO[key] = positional_shingles_with_df(
-            docs, k=_SPAN_SHINGLE_K
-        ).localCheckpoint(eager=True)
-    return _SPAN_MEMO[key]
-
-
-def _span_shingles_range(spark, docs, min_df, max_df):
-    from hama_spark.extensions.dedup import _df_range
-
-    return _df_range(_span_shingles_cached(spark, docs), min_df, max_df)
-
-
 def _q_shared_span_pairs(spark, t):
     """Exact duplicated-span detection (Lee et al. 2022 shape): doc
     pairs sharing >= 3 distinct 8-token runs, with span extents."""
     from hama_spark.extensions import shared_span_pairs
 
-    docs = t["documents"]
     return shared_span_pairs(
-        docs,
+        t["documents"],
         k=_SPAN_SHINGLE_K,
         min_shared=_SPAN_MIN_SHARED,
         max_df=_SPAN_MAX_DF,
-        shared=_span_shingles_range(spark, docs, 2, _SPAN_MAX_DF),
     )
 
 
@@ -2981,12 +2846,8 @@ def _q_scrub_shared_spans(spark, t):
     8-token runs are cut; per-doc counts + cleaned-stream md5."""
     from hama_spark.extensions import scrub_shared_spans
 
-    docs = t["documents"]
     return scrub_shared_spans(
-        docs,
-        k=_SPAN_SHINGLE_K,
-        max_df=_SPAN_MAX_DF,
-        shared=_span_shingles_range(spark, docs, 2, _SPAN_MAX_DF),
+        t["documents"], k=_SPAN_SHINGLE_K, max_df=_SPAN_MAX_DF
     )
 
 
@@ -2997,33 +2858,28 @@ def _q_scrub_boilerplate(spark, t):
     in this regime, so no quadratic hot bucket to fence)."""
     from hama_spark.extensions import scrub_shared_spans
 
-    docs = t["documents"]
     return scrub_shared_spans(
-        docs,
-        k=_SPAN_SHINGLE_K,
-        min_df=_BOILER_MIN_DF,
-        max_df=None,
-        shared=_span_shingles_range(spark, docs, _BOILER_MIN_DF, None),
+        t["documents"], k=_SPAN_SHINGLE_K, min_df=_BOILER_MIN_DF, max_df=None
     )
 
 
 def _q_bpe_top_tokens(spark, t):
     """Vocabulary usage: top-40 trained-vocab tokens by corpus
-    occurrence count (rides the memoized merge table)."""
+    occurrence count under the trained merge table."""
     from hama_spark.extensions import bpe_top_tokens
 
     docs = t["documents"]
-    return bpe_top_tokens(docs, _bpe_merges_cached(spark, docs), top_n=40)
+    return bpe_top_tokens(docs, _bpe_merges(docs), top_n=40)
 
 
 def _q_bpe_fertility(spark, t):
     """Tokenizer fertility by language: chars-per-trained-token per
-    slice — the number vocabulary design optimizes (rides the memoized
-    merge table + one counting pass)."""
+    slice — the number vocabulary design optimizes (trained merge table
+    + one counting pass)."""
     from hama_spark.extensions import bpe_fertility
 
     docs = t["documents"]
-    return bpe_fertility(docs, _bpe_merges_cached(spark, docs), by="lang")
+    return bpe_fertility(docs, _bpe_merges(docs), by="lang")
 
 
 def _q_ann_recall(spark, t):
@@ -3034,10 +2890,10 @@ def _q_ann_recall(spark, t):
 
     emb = t["embeddings"]
     return ann_recall_report(
-        _topk_cached(spark, emb, "cosine"),
+        _topk(emb, "cosine"),
         {
-            "lsh_cosine_topk": _topk_cached(spark, emb, "lsh"),
-            "ivf_topk": _topk_cached(spark, emb, "ivf"),
+            "lsh_cosine_topk": _topk(emb, "lsh"),
+            "ivf_topk": _topk(emb, "ivf"),
         },
     )
 
@@ -3049,25 +2905,14 @@ def _q_bpe_vocab_token_count(spark, t):
     from hama_spark.extensions.bpe import bpe_token_counts
 
     docs = t["documents"]
-    return bpe_token_counts(docs, _bpe_merges_cached(spark, docs))
+    return bpe_token_counts(docs, _bpe_merges(docs))
 
 
-_BM25_MEMO: dict = {}
-
-
-def _bm25_cached(spark, docs):
-    """The (tiny) BM25 self-query top-k, materialized once per
-    (session, corpus plan): bm25_topk and hybrid_rrf both consume it,
-    so the corpus postings pass runs once."""
+def _bm25(docs):
+    """BM25 self-query top-k: bm25_topk and hybrid_rrf's lexical side."""
     from hama_spark.extensions.retrieval import bm25_topk, self_queries
 
-    key = (spark.sparkContext.applicationId, docs.semanticHash())
-    if key not in _BM25_MEMO:
-        _BM25_MEMO.clear()  # single-entry memo, evict for GC
-        _BM25_MEMO[key] = bm25_topk(
-            docs, self_queries(docs), k=5
-        ).localCheckpoint(eager=True)
-    return _BM25_MEMO[key]
+    return bm25_topk(docs, self_queries(docs), k=5)
 
 
 def _q_bm25_topk(spark, t):
@@ -3076,7 +2921,7 @@ def _q_bm25_topk(spark, t):
     Lucene/Okapi formula over the shared whitespace-token discipline,
     ranked on the 6-dp-rounded score so the ordering replays exactly in
     the DuckDB twin."""
-    return _bm25_cached(spark, t["documents"])
+    return _bm25(t["documents"])
 
 
 def _q_hybrid_rrf(spark, t):
@@ -3089,7 +2934,7 @@ def _q_hybrid_rrf(spark, t):
     from hama_spark.extensions import cosine_topk
     from hama_spark.extensions.retrieval import rrf_fuse
 
-    lex = _bm25_cached(spark, t["documents"])
+    lex = _bm25(t["documents"])
     emb = t["embeddings"]
     dense = cosine_topk(
         emb, emb.filter("vec_id % 101 = 0"), k=5
@@ -3126,27 +2971,16 @@ def _q_link_prediction(spark, t):
     from hama_spark.graph.linkpred import link_prediction
 
     return link_prediction(
-        _sym_sp_edges_cached(spark, t),
-        max_neighbor_degree=64, min_common=2, topk=25, prepared=True,
+        _sp_edges(spark, t), max_neighbor_degree=64, min_common=2, topk=25
     )
 
 
-_FUZZY_MEMO: dict = {}
-
-
-def _fuzzy_pairs_cached(spark, customer):
-    """Blocked fuzzy customer pairs, materialized once per (session,
-    table plan): fuzzy_match_customers and entity_clusters share the
-    FastSS candidate generation + levenshtein verify."""
+def _fuzzy_pairs(customer):
     from hama_spark.operators.linkage import blocked_fuzzy_pairs
 
-    key = (spark.sparkContext.applicationId, customer.semanticHash())
-    if key not in _FUZZY_MEMO:
-        _FUZZY_MEMO.clear()  # single-entry memo, evict for GC
-        _FUZZY_MEMO[key] = blocked_fuzzy_pairs(
-            customer, "c_custkey", "c_name", ["c_nationkey"], max_distance=1
-        ).localCheckpoint(eager=True)
-    return _FUZZY_MEMO[key]
+    return blocked_fuzzy_pairs(
+        customer, "c_custkey", "c_name", ["c_nationkey"], max_distance=1
+    )
 
 
 def _q_fuzzy_match_customers(spark, t):
@@ -3155,19 +2989,19 @@ def _q_fuzzy_match_customers(spark, t):
     generation is an equi-join on the blocking key so the quadratic is
     fenced to Σ|block|², and the levenshtein predicate is a JVM
     built-in post-join filter."""
-    return _fuzzy_pairs_cached(spark, t["customer"])
+    return _fuzzy_pairs(t["customer"])
 
 
 def _q_entity_clusters(spark, t):
     """Entity resolution (operators/linkage.py entity_clusters): the
-    memoized fuzzy customer pairs collapse into entities via the
+    fuzzy customer pairs collapse into entities via the
     distributed Pregel CC, labeling EVERY record with its canonical
     entity_id + cluster_size — the golden-record assignment."""
     from hama_spark.operators.linkage import entity_clusters
 
     cust = t["customer"]
     return entity_clusters(
-        cust, _fuzzy_pairs_cached(spark, cust), "c_custkey"
+        cust, _fuzzy_pairs(cust), "c_custkey"
     ).select("c_custkey", "entity_id", "cluster_size")
 
 
@@ -3383,9 +3217,7 @@ QUERIES: dict[str, Callable] = {
     "text_stats": _q_text_stats,
     "quality_score": _q_quality,
     "heuristic_flags": _q_heuristic_flags,
-    # retained r4 window (bpe_train_merges before bpe_vocab_token_count:
-    # the counting query reuses the memoized merge table; ann_recall
-    # re-derives the three searchers it compares)
+    # retained r4 window
     "hits_scores": _q_hits_scores,
     "harmonic_centrality": _q_harmonic_centrality,
     "betweenness": _q_betweenness,
@@ -3398,8 +3230,6 @@ QUERIES: dict[str, Callable] = {
     "lsh_cosine_topk": _q_lsh_topk,
     "ivf_topk": _q_ivf_topk,
     "kmeans_sizes": _q_kmeans,
-    # shared_span_pairs before scrub_shared_spans: the removal reuses
-    # the memoized cross-document shingle relation
     "shared_span_pairs": _q_shared_span_pairs,
     "scrub_shared_spans": _q_scrub_shared_spans,
     "inlink_count": _q_inlink,
@@ -3416,11 +3246,6 @@ QUERIES: dict[str, Callable] = {
     "personalized_pagerank": _q_personalized_pagerank,
     "random_walks": _q_random_walks,
     "label_communities": _q_label_communities,
-    # minhash_lsh_pairs before dedup_near: the cluster-collapse query
-    # reuses the memoized LSH pairs, so in-order runs price the
-    # signature pipeline once (in the pairs query) and dedup_near shows
-    # the connected-components cost alone; same memo pattern for
-    # lsh_cosine_pairs/dedup_embedding and semantic pairs/dedup.
     "minhash_lsh_pairs": _q_minhash_lsh,
     "dedup_near": _q_dedup_near,
     "lsh_cosine_pairs": _q_lsh_cosine_pairs,
@@ -3530,58 +3355,6 @@ QUERIES: dict[str, Callable] = {
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     return {name: _q(fn) for name, fn in QUERIES.items()}
-
-
-def _evict_topk_method(method: str) -> Callable[[], None]:
-    """Evict one searcher's _TOPK_MEMO entries (and, for ivf-family
-    methods, the shared trained-cells entry so a repeat prices the
-    k-means training too)."""
-    def _evict() -> None:
-        drop = [
-            k for k in _TOPK_MEMO
-            if k[2] == method
-            or (method in ("ivf", "hard_negatives") and k[2] == "_cells")
-        ]
-        for k in drop:
-            del _TOPK_MEMO[k]
-    return _evict
-
-
-def bench_memo_resets() -> dict[str, Callable[[], None]]:
-    """Query name -> zero-arg callable that evicts the memo THAT query
-    populates. bench.py min-of-N calls the reset BETWEEN repeat runs of
-    a memo-producing query, so a repeat re-prices the full pipeline
-    instead of timing a memo hit (~0s, which would corrupt the min).
-    The LAST repeat repopulates the memo, so downstream consumer
-    queries (dedup_near, scrub_shared_spans, entity_clusters, ...)
-    still ride a warm memo exactly as in a single-run bench. Consumers
-    themselves need no reset: every one of their repeats does the same
-    post-memo work. _SYM_EDGES_MEMO is deliberately absent — it is
-    shared prep across the iterative graph block (already min-of-N
-    since r6) and evicting it would change what those rows have
-    measured since BENCH_r06."""
-    return {
-        "minhash_lsh_pairs": _LSH_MEMO.clear,
-        "lsh_cosine_pairs": _EMB_PAIRS_MEMO.clear,
-        "semantic_dup_pairs": _SEM_PAIRS_MEMO.clear,
-        "bpe_train_merges": _BPE_MEMO.clear,
-        "shared_span_pairs": _SPAN_MEMO.clear,
-        "fuzzy_match_customers": _FUZZY_MEMO.clear,
-        "bm25_topk": _BM25_MEMO.clear,
-        "cosine_topk": _evict_topk_method("cosine"),
-        "lsh_cosine_topk": _evict_topk_method("lsh"),
-        "ivf_topk": _evict_topk_method("ivf"),
-        "hard_negatives": _evict_topk_method("hard_negatives"),
-        # ann_recall runs BEFORE the standalone searcher queries in dict
-        # order (deliberate: it prices the three builders, they read its
-        # memos) — so on repeat it must evict everything it built, or
-        # min-of-N times a memo ride (observed: 13.8s -> 1.16s)
-        "ann_recall": _evict_all_topk,
-    }
-
-
-def _evict_all_topk() -> None:
-    _TOPK_MEMO.clear()
 
 
 _BM25_TOPK_SQL = r"""

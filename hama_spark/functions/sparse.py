@@ -110,17 +110,6 @@ def svec_scale(m, s) -> Column:
     return _drop_zeros(F.transform_values(_c(m), lambda k, v: v * s))
 
 
-def svec_apply(m, fn) -> Column:
-    """applyToElements:107 over stored entries. ``fn(value) -> Column``.
-    Caller's fn must map 0 -> 0 for the sparse representation to stay
-    faithful (true for scale/pow/abs/sqrt — the reference's own uses)."""
-    return _drop_zeros(F.transform_values(_c(m), lambda k, v: fn(v)))
-
-
-def svec_abs(m) -> Column:
-    return F.transform_values(_c(m), lambda k, v: F.abs(v))
-
-
 def svec_pow(m, p: int) -> Column:
     if p == 2:
         return F.transform_values(_c(m), lambda k, v: v * v)

@@ -38,7 +38,7 @@ from pyspark.sql import functions as F
 # round. Fine into the tens of millions of vertices (a 16M-vertex
 # broadcast is ~200 MB, well under Spark's 8 GB/512M-row cap); above
 # the cap kcore falls back to the shuffle round, which never
-# broadcasts vertex state. Env-tunable for cluster posture.
+# broadcasts vertex state.
 _BCAST_MAX_VERTICES = 16_000_000
 
 
@@ -62,7 +62,7 @@ def kcore(
     preserves the streamed side's partitioning, so the per-round
     count/window/h-index/agg chain runs with ZERO exchanges: the only
     per-round data movement is the |V|-row cores broadcast (capped by
-    ``SPARK_GRAFT_KCORE_BCAST_MAX``, default 16M vertices — above it
+    ``_BCAST_MAX_VERTICES``, 16M vertices — above it
     the round falls back to the previous plan: edge cache partitioned
     on ``src`` feeding a shuffle join, with the count/window exchange
     per round). The previous plan shuffled the FULL |E|-row neighbor
@@ -70,11 +70,8 @@ def kcore(
     exchange into the window — at 6 rounds that is 12 edge-scale
     exchanges this plan removes outright (guide §2.4).
     """
-    import os
-
     spark = edges.sparkSession
     n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    bcast_max = int(os.environ.get("SPARK_GRAFT_KCORE_BCAST_MAX", _BCAST_MAX_VERTICES))
 
     sym0 = (
         edges.select("src", "dst")
@@ -84,7 +81,7 @@ def kcore(
     # one cheap pass decides the round plan: |V| = distinct src of the
     # symmetrized set (every vertex appears as a src after symmetrize)
     n_vertices = sym0.select("src").distinct().count()
-    bcast = n_vertices <= bcast_max
+    bcast = n_vertices <= _BCAST_MAX_VERTICES
     sym = sym0.repartition(n_part, "dst" if bcast else "src").cache()
     sym.count()
 

@@ -28,8 +28,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-import os
-
 from hama_spark.plans.pregel import MSG, PregelContext, pregel
 
 # Giant-SCC regime gate for the backward edge restriction: when at
@@ -37,8 +35,8 @@ from hama_spark.plans.pregel import MSG, PregelContext, pregel
 # checkpoint and run the backward phase on the full (already
 # checkpointed) edge relation — result-identical either way, see the
 # in-loop comment. 0.95 marks "restriction would drop <5% of edges";
-# tune with the env var at scale, 1.0 disables the skip entirely.
-_BWD_SKIP_RATIO = float(os.environ.get("SPARK_GRAFT_SCC_BWD_SKIP_RATIO", "0.95"))
+# 1.0 disables the skip entirely.
+_BWD_SKIP_RATIO = 0.95
 
 
 def _forward_colors(

@@ -2,8 +2,6 @@ from hama_spark.ml.feature import (
     FeatureTransformer,
     apply_features,
     clip_outliers,
-    identity_transformer,
-    log1p_abs_transformer,
     scale_transformer,
 )
 from hama_spark.ml.gradient_descent import gradient_descent
@@ -28,7 +26,5 @@ __all__ = [
     "FeatureTransformer",
     "apply_features",
     "clip_outliers",
-    "identity_transformer",
     "scale_transformer",
-    "log1p_abs_transformer",
 ]

@@ -5,9 +5,9 @@ DoubleVector pre-transform applied by KMeansBSP / GradientDescentBSP
 before compute) and DefaultFeatureTransformer.java (identity).
 
 In Spark a feature transformer IS a column expression
-``array<double> -> array<double>``; this module gives the identity +
-common transforms and a one-call applier so ML entry points keep the
-reference's plug-in shape without any UDF.
+``array<double> -> array<double>``; this module gives a scale
+transform and a one-call applier (``None`` = identity) so ML entry
+points keep the reference's plug-in shape without any UDF.
 """
 
 from __future__ import annotations
@@ -20,20 +20,8 @@ from pyspark.sql import functions as F
 FeatureTransformer = Callable[[Column], Column]
 
 
-def identity_transformer(v: Column) -> Column:
-    """DefaultFeatureTransformer — pass-through."""
-    return v
-
-
 def scale_transformer(factor: float) -> FeatureTransformer:
     return lambda v: F.transform(v, lambda x: x * F.lit(factor))
-
-
-def log1p_abs_transformer(v: Column) -> Column:
-    """A bounded nonlinearity: sign-preserving log(1+|x|)."""
-    return F.transform(
-        v, lambda x: F.signum(x) * F.log1p(F.abs(x))
-    )
 
 
 def apply_features(

@@ -9,12 +9,10 @@ from hama_spark.plans.audit import (
 )
 from hama_spark.plans.pregel import PregelContext, pregel
 from hama_spark.plans.randbench import rand_bench
-from hama_spark.plans.superstep import run_supersteps
 
 __all__ = [
     "pregel",
     "PregelContext",
-    "run_supersteps",
     "rand_bench",
     "audit_plan",
     "audit_broadcast_sizes",

@@ -59,7 +59,6 @@ Scale design (100 TB):
 
 from __future__ import annotations
 
-import os
 from collections.abc import Callable
 from dataclasses import dataclass, field
 from typing import Any
@@ -228,8 +227,7 @@ def pregel(
         checkpointed vertex side, whose LogicalRDD partitioning Spark
         no longer recognises). ``"auto"`` (default) picks "shuffle"
         when the pre-loop vertex count reaches
-        ``SPARK_GRAFT_PREGEL_SHUFFLE_MIN_VERTICES`` (default 50k),
-        else "broadcast" — graph-size-adaptive, not box-tuned. The
+        ``_LoopPlanGuard.MIN_VERTICES`` (50k), else "broadcast" — graph-size-adaptive, not box-tuned. The
         conf scope is the pregel call (restored on exit): Spark reads
         these confs at action time, and the loop's actions all run
         inside it.
@@ -273,9 +271,7 @@ class _LoopPlanGuard:
     broadcast joins until :meth:`restore`. Straight-line operators
     therefore do not use it."""
 
-    MIN_VERTICES = int(
-        os.environ.get("SPARK_GRAFT_PREGEL_SHUFFLE_MIN_VERTICES", "50000")
-    )
+    MIN_VERTICES = 50_000
     CONFS = {
         "spark.sql.adaptive.enabled": "false",
         "spark.sql.autoBroadcastJoinThreshold": "-1",

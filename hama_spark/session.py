@@ -159,9 +159,3 @@ def load_tables(spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR) -> dict[str, 
                 df = df.withColumn(c, F.col(c).cast("timestamp"))
         out[t] = df
     return out
-
-
-def register_views(spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR) -> None:
-    """Register each table as a temp view (for spark.sql access)."""
-    for name, df in load_tables(spark, sf_dir).items():
-        df.createOrReplaceTempView(name)

@@ -91,7 +91,7 @@ def test_modified_or_new_queries_lead_the_dict():
         # r5-new retained for a second consecutive row
         "interval_join", "kneser_ney_perplexity", "k_anonymity",
         "l_diversity", "select_under_budget", "length_buckets",
-        # pair-producers feeding collapse consumers in the window
+        # pair producers, span and top-k searchers, BPE training
         "minhash_lsh_pairs", "lsh_cosine_pairs",
         "shared_span_pairs", "scrub_shared_spans",
         "cosine_topk", "lsh_cosine_topk",
@@ -100,17 +100,3 @@ def test_modified_or_new_queries_lead_the_dict():
     }
     missing = must_lead - first50
     assert not missing, f"queries outside the driver's 50-entry window: {sorted(missing)}"
-    # pair-producing queries must precede their cluster-collapse
-    # consumers so in-order runs price the expensive stage once
-    order = list(entry.QUERIES)
-    for pairs_q, collapse_q in [
-        ("minhash_lsh_pairs", "dedup_near"),
-        ("lsh_cosine_pairs", "dedup_embedding"),
-        ("semantic_dup_pairs", "semantic_dedup"),
-        ("bpe_train_merges", "bpe_vocab_token_count"),
-        ("bpe_train_merges", "bpe_top_tokens"),
-        ("bpe_train_merges", "bpe_fertility"),
-        ("shared_span_pairs", "scrub_shared_spans"),
-        ("shared_span_pairs", "scrub_boilerplate"),
-    ]:
-        assert order.index(pairs_q) < order.index(collapse_q), (pairs_q, collapse_q)
