@@ -96,14 +96,19 @@ def connected_components_twophase(
     spark = edges.sparkSession
     n_part = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
 
+    # read the input ONCE: a lazy edge plan (entity_clusters passes its
+    # fuzzy-match candidates) would otherwise run again for each relation
+    # derived from it below
+    pairs = edges.select("src", "dst").localCheckpoint(eager=True)
+    # vertices come from ALL pairs, so self-loop-only vertices survive
+    # the u != v filter on the edge relation
     vertices = (
-        edges.select(F.col("src").alias("id"))
-        .union(edges.select(F.col("dst").alias("id")))
+        pairs.select(F.col("src").alias("id"))
+        .union(pairs.select(F.col("dst").alias("id")))
         .distinct()
-        .localCheckpoint(eager=True)
     )
     e = (
-        edges.select(F.col("src").alias("u"), F.col("dst").alias("v"))
+        pairs.select(F.col("src").alias("u"), F.col("dst").alias("v"))
         .filter(F.col("u") != F.col("v"))
         .distinct()
         .repartition(n_part, "u")

@@ -41,7 +41,6 @@ from pyspark.sql import functions as F
 def hits(
     edges: DataFrame,
     iterations: int = 5,
-    loop_plan: str = "auto",
 ) -> DataFrame:
     """edges(src, dst) directed -> (id, hub, authority), both rounded
     to 6 dp for cross-engine hashing. Vertices with no in-edges hold
@@ -49,22 +48,22 @@ def hits(
     L2-normalize over ALL vertices, matching the textbook formulation
     and the SQL replay.
 
-    ``loop_plan`` (r10, same lever as :func:`hama_spark.plans.pregel.
-    pregel`): each half-step's edges⋈scores join otherwise broadcasts
-    the |V|-row score relation — one driver-scheduled BroadcastExchange
-    job per half-step, plus an AQE query-stage round-trip per exchange;
-    ten half-steps of those dominate wall-clock while executor task
-    time stays small. "auto" scopes {AQE off, no auto-broadcast,
-    shuffled-hash joins} to the loop when the EDGE count (the relation
-    driving per-iteration volume — HITS is dense, every vertex scores
-    every round) reaches the guard threshold, planning each half-step
-    as shuffle joins against the two cached edge layouts. Interleaved
-    A/B on the sf0.1 supplier-part graph (~600k edges): base
-    [6.8, 7.2]s vs shuffle-plan [3.2, 4.5]s, identical output hashes.
+    The loop runs under pregel's size-gated loop-plan guard
+    (:class:`hama_spark.plans.pregel._LoopPlanGuard`): each half-step's
+    edges⋈scores join otherwise broadcasts the |V|-row score relation —
+    one driver-scheduled BroadcastExchange job per half-step, plus an
+    AQE query-stage round-trip per exchange; ten half-steps of those
+    dominate wall-clock while executor task time stays small. The guard
+    arms when the EDGE count (the relation driving per-iteration volume
+    — HITS is dense, every vertex scores every round) reaches its
+    threshold, planning each half-step as shuffle joins against the two
+    cached edge layouts. Interleaved A/B on the sf0.1 supplier-part
+    graph (~600k edges): base [6.8, 7.2]s vs shuffle-plan [3.2, 4.5]s,
+    identical output hashes.
     """
     from hama_spark.plans.pregel import _LoopPlanGuard
 
-    guard = _LoopPlanGuard(edges.sparkSession, loop_plan, dense=False)
+    guard = _LoopPlanGuard(edges.sparkSession)
     try:
         return _hits_loop(edges, iterations, guard)
     finally:

@@ -33,7 +33,6 @@ def pagerank(
     num_partitions: int | None = None,
     personalize: str | None = None,
     recover_dir: str | None = None,
-    dense: bool | None = None,
 ) -> DataFrame:
     """edges(src, dst) -> (id, rank). ``epsilon=None`` disables the
     convergence check and runs exactly ``max_iter`` supersteps (useful
@@ -45,8 +44,6 @@ def pagerank(
     uniformly (rank_0 = 1 at the source, 0 elsewhere), so rank becomes
     proximity to the source (random-walk-with-restart). Same loop,
     same cost — only the teleport expression changes."""
-    spark = edges.sparkSession
-
     vertices_ids = (
         edges.select(F.col("src").alias("id"))
         .union(edges.select(F.col("dst").alias("id")))
@@ -84,17 +81,6 @@ def pagerank(
         init_expr = F.when(is_src, F.lit(1.0)).otherwise(F.lit(0.0))
         alpha_expr = F.when(is_src, F.lit(1.0 - damping)).otherwise(F.lit(0.0))
 
-    if dense is None:
-        # default OFF: on local[32] the per-superstep vertex exchange is
-        # an in-process block transfer, and A/B at 1M vertices measures
-        # the sparse loop's single pipelined job faster than dense
-        # mode's per-superstep eager materialization (22 s vs 30 s fixed
-        # -iteration, ~even with convergence checks). Opt in on a real
-        # cluster, where that exchange is a NETWORK all-to-all of the
-        # full vertex state every superstep and the cached layout
-        # removes it (the plan property tests/test_pregel_dense.py
-        # pins); widest win = wide vertex state + many supersteps.
-        dense = False
     vertices = vertices_ids.select(
         "id", init_expr.alias("rank"), F.lit(0.0).alias("delta")
     )
@@ -148,10 +134,5 @@ def pagerank(
         recover_fingerprint=(
             f"pagerank|{damping}|{epsilon}|{max_iter}|{self_ref}|{personalize}"
         ),
-        # PageRank is the canonical dense-message algorithm: EVERY vertex
-        # sends every superstep, the combined inbox is ~|V| rows and
-        # never broadcasts — pregel's dense mode removes the resulting
-        # per-superstep vertex exchange (opt-in; see the default above).
-        dense=dense,
     )
     return result.select("id", "rank")

@@ -30,27 +30,14 @@ Scale design (100 TB):
   re-anchors attributes each round — the same design GraphFrames'
   AggregateMessages uses (getCachedDataFrame) for the same reason. The
   cost is moot for frontier-style algorithms: Catalyst broadcasts the
-  (small) inbox and never shuffles vertices.
-- ``dense=True`` removes that cost for dense-message algorithms
-  (PageRank-class: every vertex messages every superstep, the inbox is
-  ~|V| and never broadcasts). The trick — generalized from
-  graph/hits.py's cached-layout loop — is to cut lineage on the INBOX
-  instead of the vertices: messages are eagerly localCheckpointed each
-  superstep (fresh attributes, so the vertex lineage never contains
-  the edges subplan and the self-join check stays happy), which frees
-  the vertices to be ``cache()``-d with a pinned
-  repartition+sortWithinPartitions layout. The inbox-combine SMJ then
-  reads the vertex side exchange-free AND sort-free, and its output
-  keeps hashpartitioning(id)+ordering, so the next superstep's
-  ``cache()`` inherits the layout — ZERO vertex-side Exchanges for the
-  whole fixpoint (one per ``checkpoint_interval`` for the periodic
-  lineage cut that bounds analysis-time plan growth). Costs one action
-  per superstep (the eager inbox checkpoint) — exactly what a dense
-  algorithm's per-superstep work amortizes.
+  (small) inbox and never shuffles vertices. Cutting lineage on an
+  eagerly checkpointed inbox instead, so the vertices can stay cached
+  exchange-free, removes that Exchange for dense PageRank-class loops
+  but costs one extra action per superstep, and measured slower than
+  this loop in every A/B, local and multi-JVM (CLUSTER_r07/r08.json).
 - checkpoints also truncate the logical plan (without it analysis cost
-  grows with supersteps — SURVEY §7 risk register); on a cluster with
-  preemptible executors use reliable ``checkpoint()``
-  (``reliable_checkpoint=True``) every ``checkpoint_interval``.
+  grows with supersteps — SURVEY §7 risk register); durability across
+  a driver or executor loss is ``recover_dir``.
 - message combining is a plain ``groupBy().agg()`` — Spark inserts a
   map-side partial aggregate automatically, which IS Hama's Combiner
   optimization (bsp/Combiner.java:30) without user wiring.
@@ -104,7 +91,6 @@ def pregel(
     halt: Callable[[PregelContext], bool] | None = None,
     max_iter: int = 30,
     checkpoint_interval: int = 4,
-    reliable_checkpoint: bool = False,
     num_partitions: int | None = None,
     detect_halt: bool = True,
     halt_check_interval: int = 1,
@@ -112,10 +98,7 @@ def pregel(
     | None = None,
     recover_dir: str | None = None,
     recover_fingerprint: str = "",
-    recover_retain: int = 2,
-    dense: bool = False,
     stats_out: dict | None = None,
-    loop_plan: str = "auto",
 ) -> DataFrame:
     """Run a Pregel fixpoint and return the final vertex DataFrame.
 
@@ -144,6 +127,10 @@ def pregel(
     aggregators : name -> (vertices -> agg Column); evaluated after each
         compute, visible to callbacks the NEXT superstep (ctx.aggregates).
     halt : extra termination predicate checked after each superstep.
+    checkpoint_interval : how often (in supersteps) ``recover_dir``
+        commits the loop-carried state; without ``recover_dir`` it has
+        no effect (every superstep re-anchors with a lazy local
+        checkpoint either way).
     detect_halt : when False, skips the per-superstep message count used
         for empty-inbox termination — one fewer job+cache per iteration.
         Use for fixed-iteration runs (the loop then ends on max_iter /
@@ -172,8 +159,7 @@ def pregel(
         last committed superstep instead of superstep 0 — driver-crash
         recovery, the durable analogue of the reference's per-superstep
         message checkpoint (bsp/ft/AsyncRcvdMsgCheckpointImpl.java:69-358).
-        ``reliable_checkpoint`` covers executor loss only; this covers
-        the whole driver. Aggregator values must be JSON-serializable.
+        Aggregator values must be JSON-serializable.
     recover_fingerprint : opaque string identifying the JOB (hash the
         algorithm parameters into it — and, for recurring jobs over
         changing data, an INPUT identity such as a snapshot id or
@@ -182,89 +168,56 @@ def pregel(
         different fingerprint raises instead of resuming the wrong
         fixpoint; a run that COMPLETES clears its step checkpoints, so
         a later same-fingerprint run starts fresh instead of resuming
-        the finished state. ``recover_retain`` committed steps are kept
+        the finished state. The two latest committed steps are kept
         (pruned after each new commit).
-    dense : exchange-free vertex loop for dense-message algorithms
-        (every vertex messages every superstep, so the combined inbox
-        is ~|V| rows and never broadcasts — PageRank-class). Vertices
-        are kept CACHED in a pinned hash(id)+sorted layout and the
-        inbox is eagerly localCheckpointed instead (fresh attributes
-        keep the send self-join unambiguous), so the per-superstep
-        inbox join reads the vertex side with no Exchange and no Sort,
-        and its output inherits the layout for the next superstep's
-        cache. One vertex Exchange per ``checkpoint_interval`` remains
-        (the periodic lineage cut bounding plan growth). Costs one
-        Spark action per superstep — leave False for frontier-style
-        algorithms, where the broadcast inbox is already exchange-free
-        and the lazy one-job-per-k-supersteps chaining wins (see module
-        docstring).
     stats_out : a caller-supplied dict filled with run counters on
         return — ``supersteps_run``, ``num_vertices``, ``num_messages``
         (last observed), ``aggregates`` (final values). Hama's
         job-counter surface (P4/P9: superstep count, BSPPeer counters);
         also what scale harnesses use to normalize cost per superstep.
-    loop_plan : how per-superstep joins are PLANNED inside the sparse
-        loop (results identical; dense mode ignores it — its cached
-        layouts depend on SMJ ordering). ``"shuffle"`` scopes {AQE off,
-        auto-broadcast off, prefer shuffled-hash join} to the loop
-        body: every superstep's inbox-combine and send join runs as a
-        shuffle join pinned to the loop's fixed ``n_part``
-        hash-partitioning, so a k-superstep chain executes as ONE Spark
-        job of pipelined stages. ``"broadcast"`` keeps Spark's default
-        planning, which broadcasts the (small) inbox/frontier each
-        superstep — each BroadcastExchange is its own driver-scheduled
-        job, and with AQE every exchange adds a query-stage
-        materialization round-trip; at 30+ supersteps those driver
-        round-trips dominate when the per-superstep data amortizes the
-        stage floor (measured on sssp_gen_100k: ~140 sub-100ms stages,
-        task time < 10% of wall; interleaved A/B 16.2s -> 11.0s,
-        identical hashes). On a TINY graph the broadcast plan wins (25-
-        vertex nation DAG: two 16-task exchanges per superstep cost
-        more than broadcasting 25 rows — filtered-bench A/B measured
-        both directions), and on a cluster a frontier algorithm with a
-        tiny inbox may also prefer it: the broadcast keeps the full
-        vertex state exchange-free (a shuffle join re-exchanges the
-        checkpointed vertex side, whose LogicalRDD partitioning Spark
-        no longer recognises). ``"auto"`` (default) picks "shuffle"
-        when the pre-loop vertex count reaches
-        ``_LoopPlanGuard.MIN_VERTICES`` (50k), else "broadcast" — graph-size-adaptive, not box-tuned. The
-        conf scope is the pregel call (restored on exit): Spark reads
-        these confs at action time, and the loop's actions all run
-        inside it.
     """
     if halt_check_interval < 1:
         raise ValueError(f"halt_check_interval must be >= 1, got {halt_check_interval}")
     spark = vertices.sparkSession
     n_part = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
-    guard = _LoopPlanGuard(spark, loop_plan, dense)
+    guard = _LoopPlanGuard(spark)
     try:
         return _pregel_loop(
             vertices, edges, compute, send, combine, id_col, initial_message,
-            aggregators, halt, max_iter, checkpoint_interval, reliable_checkpoint,
-            detect_halt, halt_check_interval, mutate, recover_dir,
-            recover_fingerprint, recover_retain, dense, stats_out, spark, n_part,
-            guard,
+            aggregators, halt, max_iter, checkpoint_interval, detect_halt,
+            halt_check_interval, mutate, recover_dir, recover_fingerprint,
+            stats_out, spark, n_part, guard,
         )
     finally:
         guard.restore()
 
 
 class _LoopPlanGuard:
-    """Scopes the shuffle loop-plan confs to one iterative call.
+    """Scopes the shuffle loop-plan confs {AQE off, auto-broadcast off,
+    prefer shuffled-hash join} to one iterative call, when the graph is
+    big enough.
+
+    Armed, every superstep's inbox-combine and send join runs as a
+    shuffle join pinned to the loop's fixed hash-partitioning, so a
+    k-superstep chain executes as ONE Spark job of pipelined stages.
+    Unarmed, Spark broadcasts the (small) inbox/frontier each superstep:
+    each BroadcastExchange is its own driver-scheduled job, and with AQE
+    every exchange adds a query-stage round-trip. At 30+ supersteps on a
+    big graph those round-trips dominate (sssp_gen_100k: ~140 sub-100ms
+    stages, task time < 10% of wall; interleaved A/B 16.2s -> 11.0s,
+    identical hashes). On a TINY graph the broadcast plan wins (25-vertex
+    nation DAG: two 16-task exchanges per superstep cost more than
+    broadcasting 25 rows), so the guard arms only once the size passed
+    to :meth:`arm` reaches ``MIN_VERTICES`` — the point where
+    per-superstep data volume starts to amortize the fixed per-stage
+    floor. Results are identical either way.
 
     Two operators use it, each around its whole loop: :func:`pregel`
     (sized on the pre-loop VERTEX count) and
     :func:`hama_spark.graph.hits.hits` (sized on the EDGE count — HITS
-    is dense, so per-iteration volume scales with |E|). ``loop_plan=
-    "auto"`` decides per graph size, which is only known after that
-    count — the caller passes it to :meth:`arm`, and the guard applies
-    the confs only when the graph is big enough that per-superstep
-    broadcast-build jobs dominate (tiny graphs — e.g. the 25-vertex
-    nation DAG — plan better WITH broadcasts: a shuffle join's two
-    16-task exchanges cost more than broadcasting 25 rows; interleaved
-    A/B measured both directions). The threshold is parameterized, not
-    tuned to one machine: it marks where per-superstep data volume starts
-    to amortize the fixed per-stage floor.
+    is dense, so per-iteration volume scales with |E|). Spark reads
+    these confs at action time, and the loops' actions all run inside
+    the scope.
 
     The confs are SESSION-global while armed: a query running
     concurrently on the same SparkSession plans without AQE and
@@ -278,19 +231,12 @@ class _LoopPlanGuard:
         "spark.sql.join.preferSortMergeJoin": "false",
     }
 
-    def __init__(self, spark, loop_plan: str, dense: bool) -> None:
-        if loop_plan not in ("auto", "shuffle", "broadcast"):
-            raise ValueError(
-                f"loop_plan must be 'auto', 'shuffle' or 'broadcast', got {loop_plan}"
-            )
+    def __init__(self, spark) -> None:
         self.spark = spark
-        self.plan = "broadcast" if dense else loop_plan
         self.saved: dict[str, str | None] = {}
 
     def arm(self, size: int) -> None:
-        if self.plan == "broadcast" or self.saved:
-            return
-        if self.plan == "auto" and size < self.MIN_VERTICES:
+        if self.saved or size < self.MIN_VERTICES:
             return
         for k, v in self.CONFS.items():
             self.saved[k] = self.spark.conf.get(k, None)
@@ -307,18 +253,10 @@ class _LoopPlanGuard:
 
 def _pregel_loop(
     vertices, edges, compute, send, combine, id_col, initial_message,
-    aggregators, halt, max_iter, checkpoint_interval, reliable_checkpoint,
-    detect_halt, halt_check_interval, mutate, recover_dir,
-    recover_fingerprint, recover_retain, dense, stats_out, spark, n_part,
-    guard,
+    aggregators, halt, max_iter, checkpoint_interval, detect_halt,
+    halt_check_interval, mutate, recover_dir, recover_fingerprint,
+    stats_out, spark, n_part, guard,
 ):
-
-    def _dense_layout(df: DataFrame) -> DataFrame:
-        # the pinned exchange-free layout: hash(id) partitioning AND
-        # per-partition ordering, both preserved by InMemoryRelation,
-        # so the inbox-combine SMJ neither exchanges nor sorts this side
-        return df.repartition(n_part, id_col).sortWithinPartitions(id_col).cache()
-
     if edges is not None:
         edges = edges.repartition(n_part, "src").cache()
         edges.count()  # materialize so per-iteration scans hit cache
@@ -333,15 +271,11 @@ def _pregel_loop(
         # committed checkpoint — vertices are post-compute of superstep
         # s, inbox holds the messages already sent for superstep s+1,
         # and the scalars restore the aggregator schedule exactly.
-        if dense:
-            vertices = _dense_layout(resume["vertices"])
-            vertices.count()
-        else:
-            vertices = (
-                resume["vertices"]
-                .repartition(n_part, id_col)
-                .localCheckpoint(eager=False)
-            )
+        vertices = (
+            resume["vertices"]
+            .repartition(n_part, id_col)
+            .localCheckpoint(eager=False)
+        )
         st = resume["state"]
         ctx = PregelContext(
             superstep=resume["superstep"] + 1,
@@ -353,19 +287,12 @@ def _pregel_loop(
         inbox = resume["inbox"]
         guard.arm(ctx.num_vertices)
     else:
-        if dense:
-            # eager checkpoint FIRST: fresh attributes cut whatever the
-            # caller's vertex plan contains (often the edge relation —
-            # vertex ids are usually derived from edges), so the cached
-            # lineage below can never collide with edges in send()
-            vertices = _dense_layout(vertices.localCheckpoint(eager=True))
-        else:
-            # Pin the partitioning once (see module docstring for why
-            # the loop re-anchors with checkpoints rather than caches).
-            # Lazy checkpoint: the count() below materializes it.
-            vertices = vertices.repartition(n_part, id_col).localCheckpoint(
-                eager=False
-            )
+        # Pin the partitioning once (see module docstring for why the
+        # loop re-anchors with checkpoints rather than caches). Lazy
+        # checkpoint: the count() below materializes it.
+        vertices = vertices.repartition(n_part, id_col).localCheckpoint(
+            eager=False
+        )
         ctx = PregelContext(superstep=0, num_vertices=vertices.count())
         guard.arm(ctx.num_vertices)
 
@@ -374,16 +301,8 @@ def _pregel_loop(
             inbox = None  # compute sees ctx.superstep==0 and seeds itself
         elif callable(initial_message):
             inbox = initial_message(vertices, ctx)
-            if inbox is not None and dense:
-                # dense mode's invariant: the inbox carries FRESH
-                # attributes so the cached vertex lineage never contains
-                # the edges subplan — the initial inbox needs the same
-                # anchoring the per-superstep sends get
-                inbox = inbox.localCheckpoint(eager=True)
         else:
             inbox = None
-
-    dense_prev: DataFrame | None = None  # last superstep's still-cached vertices
 
     while True:
         if inbox is not None:
@@ -409,42 +328,17 @@ def _pregel_loop(
                 new_vertices = new_vertices.unionByName(additions)
             mutated = additions is not None or removals is not None
 
-        # Re-anchor every superstep (attribute dedup + lineage cut);
-        # reliable checkpoint at the interval when requested. Local
-        # checkpoints are LAZY: the next action that touches the vertices
-        # (mutation count, aggregator collect, or the detect_halt message
-        # count) materializes the checkpoint in the SAME job — one Spark
+        # Re-anchor every superstep (attribute dedup + lineage cut).
+        # Local checkpoints are LAZY: the next action that touches the
+        # vertices (mutation count, aggregator collect, or the detect_halt
+        # message count) materializes the checkpoint in the SAME job — one Spark
         # job per superstep instead of two or three. Fixed-iteration
         # aggregator-less runs have no mid-loop action at all: the whole
         # superstep chain executes inside the caller's single action,
         # with each checkpoint still truncating the logical plan (the
         # analysis-time growth is what the checkpoint is for).
-        interval_hit = ctx.superstep % checkpoint_interval == checkpoint_interval - 1
-        if dense:
-            # cache preserves the hash(id)+sorted layout the inbox join
-            # produced (SMJ output partitioning/ordering), so the next
-            # superstep's vertex side is exchange-free. Lineage is cut
-            # only periodically (or after a layout-destroying mutation):
-            # one vertex Exchange per checkpoint_interval instead of one
-            # per superstep.
-            materialized = False
-            if interval_hit or mutated:
-                anchored = (
-                    new_vertices.checkpoint(eager=True)
-                    if reliable_checkpoint and interval_hit
-                    else new_vertices.localCheckpoint(eager=True)
-                )
-                new_vertices = _dense_layout(anchored)
-            else:
-                new_vertices = new_vertices.cache()
-        elif reliable_checkpoint and interval_hit:
-            new_vertices = new_vertices.checkpoint(eager=True)
-            materialized = True
-        else:
-            new_vertices = new_vertices.localCheckpoint(eager=False)
-            materialized = False
-
-        vertices = new_vertices
+        vertices = new_vertices.localCheckpoint(eager=False)
+        materialized = False
         if mutated:
             # like the master's vertex-count adjustment; doubles as the
             # action that materializes this superstep's checkpoint
@@ -469,18 +363,6 @@ def _pregel_loop(
         msgs = send(vertices, edges, ctx)
         if msgs is None:
             break
-        if dense:
-            # EAGER inbox checkpoint: (a) the action that materializes
-            # this superstep's vertex cache, (b) fresh attributes — the
-            # next superstep's vertex lineage will not contain the edges
-            # subplan, which is what lets the vertices stay cached
-            # (module docstring). Only now is the previous superstep's
-            # cache safe to drop.
-            msgs = msgs.localCheckpoint(eager=True)
-            materialized = True
-            if dense_prev is not None:
-                dense_prev.unpersist()
-            dense_prev = vertices
         if detect_halt:
             # Message count doubles as the halt signal (GraphJobRunner
             # halts when no peer saw messages, :398-414). The lazy
@@ -488,10 +370,8 @@ def _pregel_loop(
             # messages AND the new vertex state they derive from. With
             # halt_check_interval > 1 the count runs every k-th
             # superstep only; in between, supersteps chain lazily and
-            # the next count executes them all in one job. (In dense
-            # mode the inbox is already eagerly anchored above.)
-            if not dense:
-                msgs = msgs.localCheckpoint(eager=False)
+            # the next count executes them all in one job.
+            msgs = msgs.localCheckpoint(eager=False)
             if ctx.superstep % halt_check_interval == halt_check_interval - 1:
                 ctx.num_messages = msgs.count()
                 # the count computes msgs from the current vertex
@@ -499,7 +379,10 @@ def _pregel_loop(
                 materialized = True
                 if ctx.num_messages == 0:
                     break
-        if recover_dir is not None and interval_hit:
+        if (
+            recover_dir is not None
+            and ctx.superstep % checkpoint_interval == checkpoint_interval - 1
+        ):
             # Durable commit of the loop-carried state (vertices are
             # post-compute of this superstep, msgs the pending inbox for
             # the next). The parquet writes double as the actions that
@@ -517,7 +400,6 @@ def _pregel_loop(
                     "prev_aggregates": ctx.prev_aggregates,
                 },
                 recover_fingerprint,
-                retain=recover_retain,
             )
             materialized = True
         inbox = msgs
@@ -530,26 +412,6 @@ def _pregel_loop(
             num_messages=ctx.num_messages,
             aggregates=dict(ctx.aggregates),
         )
-
-    if dense:
-        # copy the final state out of the cache chain so every interim
-        # cache (at most: previous + current) can be released without
-        # exposing the caller to a full-loop replay
-        final = vertices.localCheckpoint(eager=True)
-        if dense_prev is not None:
-            dense_prev.unpersist()
-        vertices.unpersist()
-        vertices = final
-        if edges is not None:
-            edges.unpersist()
-        if recover_dir is not None:
-            # the eager checkpoint above copied the final state into
-            # executor blocks, so the step parquet is no longer part of
-            # any live lineage — safe to clear, and clearing is REQUIRED:
-            # a completed run's checkpoints left behind would be silently
-            # resumed by the next same-fingerprint run over new input
-            clear_checkpoints(spark, recover_dir, recover_fingerprint)
-        return vertices
 
     if recover_dir is not None and not materialized:
         # a resumed run's lazy lineage roots at the step parquet about
@@ -567,6 +429,7 @@ def _pregel_loop(
             vertices.count()
         edges.unpersist()
     if recover_dir is not None:
-        # completed runs must not leave resumable state (see dense exit)
+        # completed runs must not leave resumable state: a later
+        # same-fingerprint run over new input would silently resume it
         clear_checkpoints(spark, recover_dir, recover_fingerprint)
     return vertices

@@ -5,7 +5,7 @@ job FROM superstep k after a failure
 (core/src/main/java/org/apache/hama/bsp/ft/AsyncRcvdMsgCheckpointImpl.java:69-358,
 intervals configured by conf/hama-default.xml:164-175, replay semantics
 exercised by core/src/test/java/org/apache/hama/bsp/TestCheckpoint.java).
-Spark's ``reliable_checkpoint`` survives executor loss but not a DRIVER
+Spark's reliable ``checkpoint()`` survives executor loss but not a DRIVER
 crash — a PageRank run dying at superstep 40/50 on preemptible
 infrastructure restarts from zero. This module closes that gap: the
 loop persists ``(superstep, vertex parquet, pending inbox parquet,

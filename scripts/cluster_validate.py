@@ -10,10 +10,6 @@ claim surface (bsp/BSPMaster.java, bsp/GroomServer.java:744-750 task
 dispatch): our equivalent is Spark's scheduler, exercised here.
 
 Checks (each timed, each verified, all on seeded generated inputs):
-  dense_pregel_ab   PageRank on a 1M-vertex graph, sparse loop vs the
-                    exchange-free ``dense=True`` loop; value-hash of
-                    the two results must match; record the speedup the
-                    local[32] A/B could not honestly measure.
   co_located_join   write both sides bucketed, join exchange-free
                     (plan-asserted: zero Exchange operators) vs the
                     same join from plain parquet; row counts equal.
@@ -30,7 +26,7 @@ Checks (each timed, each verified, all on seeded generated inputs):
 
 Usage:
     python scripts/cluster_validate.py                  # all checks
-    python scripts/cluster_validate.py dense_pregel_ab  # one check
+    python scripts/cluster_validate.py co_located_join  # one check
 
 Writes CLUSTER_r{ROUND}.json (repo root) and merges per-check so the
 suite can run in chunks.
@@ -107,63 +103,6 @@ def _executors(spark) -> int:
 
 
 # ------------------------------------------------------------- checks
-def check_dense_pregel_ab(spark) -> dict:
-    """The r6 verdict's unverifiable claim: pregel(dense=True) trades
-    one eager inbox action per superstep for ZERO vertex-side
-    Exchanges — worth it only when an Exchange costs real network, i.e.
-    never measurable inside one JVM. Measure both loops here."""
-    from hama_spark.graph.pagerank import pagerank
-    from hama_spark.sources import fast_graph_gen
-
-    edges = (
-        fast_graph_gen(spark, GRAPH_N, max_out=3, seed=42)
-        .select("src", "dst")
-        .localCheckpoint(eager=True)
-    )
-    parts = WORKERS * CORES * 2
-    out: dict = {"graph_n": GRAPH_N, "num_partitions": parts}
-    prs = {}
-    for label, dense in (("sparse", False), ("dense", True)):
-        t0 = time.time()
-        prs[label] = pagerank(
-            edges,
-            epsilon=None,
-            max_iter=5,
-            self_ref=True,
-            num_partitions=parts,
-            dense=dense,
-        ).localCheckpoint(eager=True)
-        out[f"{label}_sec"] = round(time.time() - t0, 2)
-    # Dense and sparse aggregate neighbor contributions under DIFFERENT
-    # physical plans, so their float fold orders differ legitimately —
-    # and across real executors the arrival order varies per run.
-    # A rounded-value hash therefore flips whenever a rank lands near a
-    # rounding boundary (observed flaky r8: same code, pass then fail).
-    # Compare the relations the way floats must be compared: full outer
-    # join on id, exact id-set match, max absolute rank difference
-    # under tolerance.
-    j = (
-        prs["sparse"]
-        .select("id", F.col("rank").alias("r_s"))
-        .join(prs["dense"].select("id", F.col("rank").alias("r_d")), "id", "full")
-    )
-    row = j.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(
-            F.when(F.col("r_s").isNull() | F.col("r_d").isNull(), 1).otherwise(0)
-        ).alias("missing"),
-        F.max(F.abs(F.col("r_s") - F.col("r_d"))).alias("mx"),
-    ).first()
-    out["rows"] = int(row["n"])
-    out["max_abs_rank_diff"] = float(row["mx"]) if row["mx"] is not None else None
-    out["values_match"] = bool(
-        row["missing"] == 0 and row["mx"] is not None and row["mx"] <= 1e-9
-    )
-    out["dense_speedup"] = round(out["sparse_sec"] / out["dense_sec"], 3)
-    edges.unpersist()
-    return out
-
-
 def check_co_located_join(spark) -> dict:
     """Bucketed SMJ across real executors: both sides written
     bucketBy(key) once, then joined with ZERO Exchange operators —
@@ -344,7 +283,6 @@ def check_minhash_100x(spark) -> dict:
 
 
 CHECKS = {
-    "dense_pregel_ab": check_dense_pregel_ab,
     "co_located_join": check_co_located_join,
     "recovery_10x": check_recovery_10x,
     "minhash_100x": check_minhash_100x,

@@ -78,3 +78,26 @@ def test_converges_in_logarithmic_rounds(spark, monkeypatch):
     labels = set(_labels(out).values())
     assert labels == {"00000"}
     assert calls["n"] <= 12, calls["n"]
+
+
+def test_lazy_edge_input_is_read_once(spark):
+    """A lazy edge plan is evaluated once per call, not once for the
+    vertex set and again for the edge relation: an identity Python UDF
+    on the input counts its evaluations."""
+    from pyspark.sql.types import StringType
+
+    seen = spark.sparkContext.accumulator(0)
+
+    def ident(x):
+        seen.add(1)
+        return x
+
+    pairs = [(i, i + 1) for i in range(20)] + [(30, 30)]
+    edges = _df(spark, pairs).select(
+        F.udf(ident, StringType())("src").alias("src"), "dst"
+    )
+    labels = _labels(connected_components_twophase(edges))
+    assert seen.value == len(pairs), seen.value
+    # the self-loop-only vertex is kept as its own component
+    assert labels["00030"] == "00030"
+    assert set(labels.values()) == {"00000", "00030"}

@@ -5,7 +5,8 @@ Runs ``scripts/cluster_validate.py`` in a SUBPROCESS (PySpark allows
 one SparkContext per process, and the suite's session fixture owns this
 one) against a tiny graph under ``local-cluster[2,2,1536]`` — real
 separate executor JVMs, so the assertions actually cross process
-boundaries: the dense/sparse Pregel twins must hash-match and the
+boundaries: an sssp fixpoint killed mid-run and resumed from its
+durable checkpoint must hash-match the uninterrupted run, and the
 bucketed join must plan exchange-free with the same row hash as the
 shuffled twin. The full-size artifact lives in CLUSTER_r{N}.json; this
 is the regression fence."""
@@ -37,8 +38,8 @@ def test_local_cluster_checks_smoke(tmp_path):
         [
             sys.executable,
             os.path.join(REPO, "scripts", "cluster_validate.py"),
-            "dense_pregel_ab",
             "co_located_join",
+            "recovery_10x",
         ],
         cwd=REPO,
         env=env,
@@ -49,11 +50,9 @@ def test_local_cluster_checks_smoke(tmp_path):
     assert proc.returncode == 0, proc.stderr[-2000:]
     d = json.loads(out.read_text())
     assert d["executors_seen"] == 2, d
-    ab = d["checks"]["dense_pregel_ab"]
-    # tolerance compare, not a rounded-value hash: dense/sparse fold
-    # orders differ by plan and by executor arrival order, so rounded
-    # hashes flip near boundaries (flaky observed r8)
-    assert ab.get("values_match") is True, ab
+    rec = d["checks"]["recovery_10x"]
+    assert rec.get("crashed") is True, rec
+    assert rec.get("hash_match") is True, rec
     cj = d["checks"]["co_located_join"]
     assert cj.get("hash_match") is True, cj
     assert cj.get("rows_match") is True, cj

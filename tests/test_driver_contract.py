@@ -70,33 +70,33 @@ def test_modified_or_new_queries_lead_the_dict():
 
     first50 = set(list(entry.QUERIES)[:50])
     must_lead = {
-        # new in round 6
-        "mat_ops", "connected_components_twophase",
-        # output schema changed in round 6 (exact column + escalation)
-        "key_overlap",
-        # pregel-backed (plans/pregel.py gained dense mode + recover_dir
-        # in round 6 — the init/loop restructure touches every consumer)
-        "inlink_count", "sssp", "connected_components", "pagerank",
-        "dynamic_sum", "kcore", "bipartite_matching", "semi_clustering",
-        "pagerank_gen_100k", "sssp_gen_100k", "personalized_pagerank",
-        "random_walks", "label_communities", "strongly_connected_components",
-        "graph_diameter", "harmonic_centrality", "betweenness",
+        # rebuilt by the entry-module memo deletion (each query builds
+        # its own inputs) and below the window until the reorder after it
+        "bpe_top_tokens", "bpe_fertility", "scrub_boilerplate", "bm25_topk",
+        "hybrid_rrf", "hard_negatives", "link_prediction",
+        # single-loop pregel: plans/pregel.py lost its dense loop and the
+        # loop_plan/reliable_checkpoint/recover_retain options (sssp, CC,
+        # PageRank, SCC), hits() lost loop_plan, and
+        # connected_components_twophase reads its input once (also
+        # under entity_clusters)
+        "sssp", "sssp_gen_100k", "connected_components",
+        "connected_components_twophase", "pagerank", "pagerank_gen_100k",
+        "personalized_pagerank", "strongly_connected_components",
+        "hits_scores", "entity_clusters",
+        # other memo-deletion consumers: graph analytics on raw edges
+        # (kcore also lost its broadcast-cap env var), the dedup
+        # consumers, pair producers, span, top-k and BPE queries
+        "harmonic_centrality", "betweenness", "kcore",
         "dedup_near", "dedup_embedding", "semantic_dedup",
-        "entity_clusters", "fuzzy_match_customers",
-        # kmeans/ivf family (ml/kmeans.py gained the DataFrame-centers
-        # path; extensions/similarity.py gained ivf_build) and the
-        # bloom-backed pair (functions/bloom.py validation rework)
-        "kmeans_sizes", "ivf_topk", "ann_recall", "knn_graph",
-        "semantic_dup_pairs", "bloom_decontaminate",
-        # r5-new retained for a second consecutive row
-        "interval_join", "kneser_ney_perplexity", "k_anonymity",
-        "l_diversity", "select_under_budget", "length_buckets",
-        # pair producers, span and top-k searchers, BPE training
-        "minhash_lsh_pairs", "lsh_cosine_pairs",
-        "shared_span_pairs", "scrub_shared_spans",
-        "cosine_topk", "lsh_cosine_topk",
-        "bpe_train_merges", "bpe_vocab_token_count",
-        "hits_scores", "text_stats", "quality_score", "heuristic_flags",
+        "fuzzy_match_customers", "minhash_lsh_pairs", "lsh_cosine_pairs",
+        "semantic_dup_pairs", "shared_span_pairs", "scrub_shared_spans",
+        "cosine_topk", "lsh_cosine_topk", "ivf_topk", "ann_recall",
+        "knn_graph", "bpe_train_merges", "bpe_vocab_token_count",
+        # kmeans family (ml/kmeans.py DataFrame-centers path), the
+        # bloom-backed pair (functions/bloom.py validation rework) and
+        # the r4-restored text trio
+        "kmeans_sizes", "bloom_decontaminate",
+        "text_stats", "quality_score", "heuristic_flags",
     }
     missing = must_lead - first50
     assert not missing, f"queries outside the driver's 50-entry window: {sorted(missing)}"

@@ -36,3 +36,41 @@ def test_harmonic_and_linkpred_never_touch_loop_plan_confs(spark, monkeypatch):
     assert harmonic_centrality(e, landmarks=3, radius=2).collect()
     assert link_prediction(e, min_common=1).collect()
     assert not set(touched) & set(_LoopPlanGuard.CONFS), touched
+
+
+def test_pregel_and_hits_restore_loop_plan_confs_even_on_error(spark, monkeypatch):
+    """The guard's scope ends with the call, also when the loop raises:
+    a failed pregel must not leave the session without AQE and
+    broadcast joins."""
+    import pytest
+    from pyspark.sql import functions as F
+
+    from hama_spark.graph.hits import hits
+    from hama_spark.plans.pregel import MSG, _LoopPlanGuard, pregel
+
+    monkeypatch.setattr(_LoopPlanGuard, "MIN_VERTICES", 0)
+    before = {k: spark.conf.get(k, None) for k in _LoopPlanGuard.CONFS}
+    e = spark.createDataFrame(
+        [("a", "b"), ("b", "c"), ("c", "a")], "src string, dst string"
+    )
+    verts = spark.createDataFrame([("a", 0), ("b", 1), ("c", 2)], "id string, v int")
+    armed_at_raise = []
+
+    def compute(with_inbox, ctx):
+        if ctx.superstep == 1:
+            armed_at_raise.append(spark.conf.get("spark.sql.adaptive.enabled"))
+            raise RuntimeError("compute failed at superstep 1")
+        return with_inbox.select("id", "v")
+
+    def send(vs, edg, ctx):
+        return vs.join(edg, vs["id"] == edg["src"]).select(
+            edg["dst"].alias("id"), F.col("v").alias(MSG)
+        )
+
+    with pytest.raises(RuntimeError, match="superstep 1"):
+        pregel(verts, e, compute=compute, send=send, combine=F.min, max_iter=5)
+    assert armed_at_raise == ["false"], armed_at_raise
+    assert {k: spark.conf.get(k, None) for k in _LoopPlanGuard.CONFS} == before
+
+    assert hits(e, iterations=2).collect()
+    assert {k: spark.conf.get(k, None) for k in _LoopPlanGuard.CONFS} == before

@@ -63,30 +63,35 @@ def test_hits_iterations_zero_matches_oracle(spark, tables, duck):
     assert_df_equals_oracle(hits(edges, iterations=0), duck, sql, tol=1e-6)
 
 
-def test_hits_loop_plan_identical(spark):
-    """r10 lever: loop_plan only changes half-step join planning; hub/
-    authority outputs must be identical across plans, confs restored."""
-    import pytest
-
+def test_hits_loop_plan_identical(spark, monkeypatch):
+    """The loop-plan guard only changes half-step join planning; hub/
+    authority outputs must be identical armed and unarmed, confs
+    restored. ``MIN_VERTICES`` picks the plan: 0 arms the guard on this
+    5-edge graph, a threshold above the graph size leaves it off."""
     from hama_spark.graph.hits import hits
+    from hama_spark.plans.pregel import _LoopPlanGuard
 
     edges = spark.createDataFrame(
         [("a", "b"), ("a", "c"), ("b", "c"), ("c", "a"), ("d", "c")],
         "src string, dst string",
     )
-    keys = (
-        "spark.sql.adaptive.enabled",
-        "spark.sql.autoBroadcastJoinThreshold",
-        "spark.sql.join.preferSortMergeJoin",
-    )
-    before = {k: spark.conf.get(k, None) for k in keys}
+    before = {k: spark.conf.get(k, None) for k in _LoopPlanGuard.CONFS}
+    armed = []
+    real_restore = _LoopPlanGuard.restore
+
+    def spy_restore(self):
+        armed.append(bool(self.saved))
+        real_restore(self)
+
+    monkeypatch.setattr(_LoopPlanGuard, "restore", spy_restore)
     outs = {}
-    for plan in ("shuffle", "broadcast", "auto"):
+    for plan, min_vertices in (("shuffle", 0), ("broadcast", 10**9)):
+        monkeypatch.setattr(_LoopPlanGuard, "MIN_VERTICES", min_vertices)
+        armed.clear()
         outs[plan] = sorted(
             (r["id"], r["hub"], r["authority"])
-            for r in hits(edges, iterations=3, loop_plan=plan).collect()
+            for r in hits(edges, iterations=3).collect()
         )
-    assert outs["shuffle"] == outs["broadcast"] == outs["auto"]
-    assert {k: spark.conf.get(k, None) for k in keys} == before
-    with pytest.raises(ValueError, match="loop_plan"):
-        hits(edges, loop_plan="bogus")
+        assert armed == [plan == "shuffle"], (plan, armed)
+        assert {k: spark.conf.get(k, None) for k in _LoopPlanGuard.CONFS} == before
+    assert outs["shuffle"] == outs["broadcast"]

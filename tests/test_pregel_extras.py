@@ -113,27 +113,25 @@ def test_halt_check_interval_validation(spark):
         sssp(e, "a", halt_check_interval=0)
 
 
-def test_loop_plan_shuffle_vs_broadcast_identical(spark):
-    """r10 lever: loop_plan only changes HOW per-superstep joins are
-    planned (shuffle-pinned vs broadcast); sssp results must be
-    identical, and the confs it scopes must be restored afterwards."""
-    import pytest
+def test_loop_plan_shuffle_vs_broadcast_identical(spark, monkeypatch):
+    """The loop-plan guard only changes HOW per-superstep joins are
+    planned (shuffle-pinned when armed, broadcast when not); sssp
+    results must be identical, and the confs it scopes must be restored
+    afterwards. ``MIN_VERTICES`` picks the plan: 0 arms the guard on
+    this 6-vertex graph, a threshold above the graph size leaves it
+    off."""
+    from hama_spark.plans.pregel import MSG, _LoopPlanGuard, pregel
 
     edges = spark.createDataFrame(
         [("a", "b", 1), ("b", "c", 2), ("a", "c", 9), ("c", "d", 1), ("x", "y", 4)],
         "src string, dst string, weight int",
     )
-    before = {
-        k: spark.conf.get(k)
-        for k in (
-            "spark.sql.adaptive.enabled",
-            "spark.sql.autoBroadcastJoinThreshold",
-            "spark.sql.join.preferSortMergeJoin",
-        )
-    }
-    from hama_spark.plans.pregel import MSG, pregel
+    before = {k: spark.conf.get(k) for k in _LoopPlanGuard.CONFS}
+    seen_aqe = []
 
     def compute(with_inbox, ctx):
+        # compute runs inside the guard's scope: record what it planned under
+        seen_aqe.append(spark.conf.get("spark.sql.adaptive.enabled"))
         improved = F.col(MSG).isNotNull() & (F.col(MSG) < F.col("dist"))
         return with_inbox.select(
             "id",
@@ -163,7 +161,9 @@ def test_loop_plan_shuffle_vs_broadcast_identical(spark):
         return send(vs, edges, ctx)
 
     results = {}
-    for plan in ("shuffle", "broadcast", "auto"):
+    for plan, min_vertices in (("shuffle", 0), ("broadcast", 10**9)):
+        monkeypatch.setattr(_LoopPlanGuard, "MIN_VERTICES", min_vertices)
+        seen_aqe.clear()
         out = pregel(
             verts,
             edges,
@@ -172,15 +172,13 @@ def test_loop_plan_shuffle_vs_broadcast_identical(spark):
             combine=F.min,
             initial_message=initial_message,
             max_iter=10,
-            loop_plan=plan,
         )
         results[plan] = sorted((r["id"], r["dist"]) for r in out.collect())
-    assert results["shuffle"] == results["broadcast"] == results["auto"]
-    after = {k: spark.conf.get(k) for k in before}
-    assert after == before, f"loop confs leaked: {after} != {before}"
-
-    with pytest.raises(ValueError, match="loop_plan"):
-        pregel(verts, edges, compute=compute, send=send, combine=F.min, loop_plan="bogus")
+        armed = plan == "shuffle"
+        assert seen_aqe and all((v == "false") == armed for v in seen_aqe), (plan, seen_aqe)
+        after = {k: spark.conf.get(k) for k in before}
+        assert after == before, f"loop confs leaked: {after} != {before}"
+    assert results["shuffle"] == results["broadcast"]
 
 
 def test_sssp_frontier_hops_identical(spark):

@@ -110,7 +110,7 @@ def test_checkpoint_retention_prunes_older_steps(spark, tmp_path):
     rdir = str(tmp_path / "retain")
     sssp_mod.sssp(edges, "0", checkpoint_interval=2, recover_dir=rdir)
     steps = committed_steps(spark, rdir)
-    assert len(steps) <= 2  # default recover_retain=2
+    assert len(steps) <= 2  # save_checkpoint's default retain=2
     assert steps == sorted(steps)
 
 
@@ -161,43 +161,6 @@ def test_uncommitted_step_dir_is_invisible(spark, tmp_path):
     (rdir / "step=000007" / "vertices").mkdir(parents=True)
     assert committed_steps(spark, str(rdir)) == []
     assert load_checkpoint(spark, str(rdir), "x") is None
-
-
-def test_dense_mode_resume_matches_uninterrupted_run(spark, tmp_path, monkeypatch):
-    """recover_dir x dense=True: the exchange-free cached-vertex loop
-    must checkpoint and resume exactly like the sparse loop — the
-    resume path rebuilds the pinned layout from the step parquet."""
-    n = 16
-    ring = spark.range(n).select(
-        F.col("id").cast("string").alias("src"),
-        (F.pmod(F.col("id") + 1, F.lit(n))).cast("string").alias("dst"),
-    )
-    chords = spark.range(n).select(
-        F.col("id").cast("string").alias("src"),
-        F.floor(F.col("id") / 2).cast("string").alias("dst"),
-    )
-    edges = ring.union(chords)
-    rdir = str(tmp_path / "dense_ckpt")
-    kw = dict(epsilon=1e-9, max_iter=10, checkpoint_interval=3, dense=True)
-
-    expected = sorted(
-        (r["id"], round(r["rank"], 12))
-        for r in pagerank_mod.pagerank(edges, **kw).collect()
-    )
-
-    real = pagerank_mod.pregel
-    monkeypatch.setattr(pagerank_mod, "pregel", _killing_pregel(real, 7, []))
-    with pytest.raises(RuntimeError, match="simulated driver crash"):
-        pagerank_mod.pagerank(edges, recover_dir=rdir, **kw)
-    assert committed_steps(spark, rdir), "crash must leave committed steps"
-
-    seen: list[int] = []
-    monkeypatch.setattr(pagerank_mod, "pregel", _killing_pregel(real, None, seen))
-    resumed = pagerank_mod.pagerank(edges, recover_dir=rdir, **kw)
-    got = sorted((r["id"], round(r["rank"], 12)) for r in resumed.collect())
-    assert got == expected
-    assert min(seen) >= 6, seen  # resumed, not restarted
-    assert committed_steps(spark, rdir) == []  # completion cleared state
 
 
 def test_clear_checkpoints_spares_other_jobs_steps(spark, tmp_path):
